@@ -49,7 +49,7 @@ object Main {
     val tracer = new Tracer(false)
     val probe = if (traced) Some(new JobProbe) else None
 
-    val spark = session(work, cores, work.resolve("spark-local").toString)
+    val spark = session(work, workload.cores(cores), work.resolve("spark-local").toString)
     probe.foreach(spark.sparkContext.addSparkListener)
     val sessionS = (System.currentTimeMillis() - Jvm.startMs) / 1000.0
     val ctx = new Ctx(spark, data, work, seed, seconds, tracer, rec, checks, probe, cores)

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQueryProgress, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress, Trigger}
 
 import graft.SparkEntry
 import graft.cdc.{CdcOps, CdcQueries, CdcSim, Envelope}
@@ -30,6 +30,8 @@ trait Workload {
   def verify(ctx: Ctx): Unit
   /** Extra traced-only measurements after the windows. */
   def traceExtras(ctx: Ctx): Unit = ()
+  /** Spark task threads the run's session gets, of `available` cores. */
+  def cores(available: Int): Int = available
 }
 
 object Workload {
@@ -80,11 +82,14 @@ object Workload {
     }
     Workload.dataLatencies(ps).foreach(ctx.rec.sample("CdcPipeline.batch_latency_ms", _))
     ctx.rec.add("StreamDedup.injected_dups", t.dups.toDouble)
-    ctx.rec.add("StreamDedup.rows_out",
-      ingest.commits.asScala.filter(_.tag == tag).map(_.rows).sum.toDouble)
+    val ids = Ingest.data(ps).map(_.batchId).toSet
+    ctx.rec.add("StreamDedup.rows_out", ingest.commits.asScala
+      .filter(c => c.tag == tag && ids(c.batchId)).map(_.rows).sum.toDouble)
   }
 
-  /** Freshness of each file of `tag`'s topic, from `scheduledMs`. */
+  /** Freshness of each file of `tag`'s topic, from `scheduledMs`, over
+    * the data batches of `ps`.
+    */
   def freshness(ingest: Ingest, ps: Seq[StreamingQueryProgress], tag: String,
       t: Topic, scheduledMs: IndexedSeq[Long]): IndexedSeq[Option[Long]] = {
     val maxTs = Ingest.data(ps).flatMap(p =>
@@ -113,6 +118,7 @@ final class Backfill extends Workload {
     val logs = new java.util.concurrent.ConcurrentHashMap[String, IndexedSeq[Topics.Event]]()
     Workload.concurrently(layout.map(_._1))(name => logs.put(name, Topics.generate(ctx.spark, ctx.data, name)))
     ctx.rec.set("CdcSim.gen_s", Workload.secondsSince(t0))
+    System.err.println(f"[perfbench] topics generated in ${Workload.secondsSince(t0)}%.2f s")
     staged = layout.map { case (name, nFiles) =>
       val t = Topics.stage(name, logs.get(name), nFiles, ctx.seed, dupShare = 0.10, lateShare = 0.0)
       Topics.write(t, dir.resolve(name), 0, t.files.size, 1000000000000L)
@@ -126,21 +132,25 @@ final class Backfill extends Workload {
       Topics.write(w, dir.resolve("warm-topics").resolve(t.name), 0, 1, 1000000000000L)
       (w, dir.resolve("warm-topics").resolve(t.name))
     }
+    val w0 = System.nanoTime()
     val ingest = new Ingest(ctx.spark, new Tracer(false), new Recorder)
     val qs = warm.map { case (t, src) =>
       ingest.start(t, src, dir.resolve("warm").resolve(t.name), Trigger.AvailableNow(), "warm-up")
     }
     ctx.checks.op(qs.forall(q => scala.util.Try(q.awaitTermination()).isSuccess), "backfill warm-up")
+    System.err.println(f"[perfbench] warm-up pass ${Workload.secondsSince(w0)}%.2f s")
   }
 
   def events: Long = staged.map(_._1.events).sum
 
-  /** `seconds` sets the number of passes, one per 10 s (at least one): a
-    * deadline would let the count flip between runs as a pass nears it.
+  /** `seconds` sets the number of passes, one per full 20 s (at least
+    * one): a pass takes about 10 s on 4 cores and its checks half as long
+    * again. A deadline would let the count flip between runs as a pass
+    * nears it.
     */
   def window(ctx: Ctx, name: String, seconds: Double): Window = {
     val ingest = new Ingest(ctx.spark, ctx.tracer, ctx.rec)
-    val all = (0 until math.max(1, math.round(seconds / 10).toInt)).map { _ =>
+    val all = (0 until math.max(1, (seconds / 20).toInt)).map { _ =>
       val i = passes.size
       val root = ctx.work.resolve(s"$name-pass$i")
       passes :+= root
@@ -225,31 +235,49 @@ final class Backfill extends Workload {
   }
 }
 
-/** Open-loop freshness over one continuing orders stream: set-up stages
-  * the first third of the log as history files and runs the chain once over
-  * them (seeding store, sink and dedup state, and warming the JVM); each
-  * window then restarts the query from its checkpoint with a
-  * `ProcessingTime` trigger while a generator thread publishes the next
-  * files of the log on a fixed schedule.
+/** Open-loop freshness over one continuing orders stream. Set-up stages
+  * the first third of the log as history files and starts the one
+  * `ProcessingTime` query of the run over them: its first batch seeds the
+  * store, the sink and the dedup state. A lead-in of trickle files warms
+  * the small-batch path. Each window publishes the next files of the
+  * log on a fixed schedule from a generator thread into the same running
+  * query, so no window pays a restart.
   */
 final class Trickle extends Workload {
-  /** Offered load: 10 files of 25 events a second, below the rate at which
-    * a fresh JVM's backlog grows on 4 cores. A window publishes at least 200
-    * files: a batch takes seconds, and fewer files leave too few batches
-    * for a steady median.
+  /** Half the cores: a trickle batch is a chain of small jobs whose
+    * latency rides on the driver thread, and with a task thread on every
+    * core one run in a few ran every batch twice as slow. Two threads are
+    * as fast and keep the spare cores for the driver, the generator, GC and
+    * the JIT.
     */
-  val filesPerS = 10
-  val eventsPerFile = 25
-  val minFiles = 200
+  override def cores(available: Int): Int = math.max(1, available / 2)
+
+  /** Offered load: 7 files of 15 events a second. A batch costs about 2 s
+    * on 2 cores whatever its size, so batches carry about 15 files and
+    * their latency hardly depends on the load; near the rate at which the
+    * backlog grows, a slower host lengthens every batch and the next one
+    * carries more files, so the latency swings run to run. A window
+    * publishes `seconds` worth of files, and at least 100.
+    */
+  val filesPerS = 7
+  val eventsPerFile = 15
+  val minFiles = 100
+  /** Set-up publishes this many files while the history batch runs: the
+    * first small batch after it runs slower than the rest.
+    */
+  val leadInFiles = 10
   val historyFiles = 4
   val triggerMs = 200L
   /** Files staged per window; a traced run has two windows. */
   val windows = 2
+  val tag = "trickle"
   var topic: Topic = _
   private var history: Seq[String] = Nil
   private var perWindow = 0
   private var published = 0
   private var root: Path = _
+  private var ingest: Ingest = _
+  private var query: StreamingQuery = _
   /** Lines published so far: a later copy of one is an injected duplicate. */
   private val seen = scala.collection.mutable.HashSet.empty[String]
 
@@ -259,32 +287,38 @@ final class Trickle extends Workload {
     val t0 = System.nanoTime()
     val log = Topics.generate(ctx.spark, ctx.data, "orders")
     ctx.rec.set("CdcSim.gen_s", Workload.secondsSince(t0))
+    System.err.println(f"[perfbench] topics generated in ${Workload.secondsSince(t0)}%.2f s")
     ctx.rec.set("CdcSim.events", log.size.toDouble)
     var cut = log.size / 3
     while (cut < log.size && log(cut).ts == log(cut - 1).ts) cut += 1
     val rest = log.drop(cut)
-    perWindow = math.min(rest.size / eventsPerFile / windows,
+    perWindow = math.min((rest.size / eventsPerFile - leadInFiles) / windows,
       math.max(minFiles, (ctx.seconds * filesPerS).round.toInt))
-    topic = Topics.stage("orders", rest.take(windows * perWindow * eventsPerFile),
-      windows * perWindow, ctx.seed, dupShare = 0.10, lateShare = 0.05)
+    val nFiles = leadInFiles + windows * perWindow
+    topic = Topics.stage("orders", rest.take(nFiles * eventsPerFile), nFiles, ctx.seed,
+      dupShare = 0.10, lateShare = 0.05)
     history = log.take(cut).map(_.value)
     root = dir
-    // history files sort before the trickle's (part-h*), and run as one batch
     val h = Topics.stage("orders", log.take(cut), historyFiles, ctx.seed, 0.0, 0.0)
     Topics.write(h, src, 0, historyFiles, System.currentTimeMillis() - 60000L, "history")
-    val q = new Ingest(ctx.spark, new Tracer(false), new Recorder).start(topic, src, root,
-      Trigger.AvailableNow(), "history")
-    ctx.checks.op(scala.util.Try(q.awaitTermination()).isSuccess, "trickle history")
+    ingest = new Ingest(ctx.spark, ctx.tracer, ctx.rec)
+    query = ingest.start(topic, src, root, Trigger.ProcessingTime(triggerMs), tag)
+    // the lead-in is published while the history batch runs
+    val ok = scala.util.Try {
+      publish(0 until leadInFiles)
+      query.processAllAvailable()
+    }
+    ctx.checks.op(ok.isSuccess, s"trickle history and lead-in ${ok.failed.getOrElse("")}")
+    published = leadInFiles
+    System.err.println(s"[perfbench] history and lead-in batches, rows/ms: ${batches(query.recentProgress.toSeq)}")
+    (0 until leadInFiles).flatMap(topic.files).foreach(seen.add)
   }
 
-  def window(ctx: Ctx, name: String, seconds: Double): Window = {
-    val ingest = new Ingest(ctx.spark, ctx.tracer, ctx.rec)
-    val q = ingest.start(topic, src, root, Trigger.ProcessingTime(triggerMs), name)
-    // restart costs (checkpoint and state recovery) land before the first
-    // file is due, not in its freshness
-    q.processAllAvailable()
-    val files = published until published + perWindow
-    published += perWindow
+  /** Publish `files` one every `1/filesPerS` s from a generator thread,
+    * starting half a second from now. Returns each file's due and actual
+    * publish times in epoch ms.
+    */
+  private def publish(files: Seq[Int]): (IndexedSeq[Long], IndexedSeq[Long]) = {
     val n = files.size
     val intervalNs = 1000000000L / filesPerS
     val due = Array.ofDim[Long](n)
@@ -303,35 +337,51 @@ final class Trickle extends Workload {
     }, "perfbench-generator")
     gen.start()
     gen.join()
-    val ok = try { q.processAllAvailable(); true } catch {
+    (due.toIndexedSeq, sent.toIndexedSeq)
+  }
+
+  private def batches(ps: Seq[StreamingQueryProgress]): String =
+    Ingest.data(ps).map(p => s"${p.numInputRows}/${Ingest.duration(p, "triggerExecution").toLong}").mkString(" ")
+
+  private def stopQuery(): Unit = if (query != null && query.isActive) query.stop()
+
+  def window(ctx: Ctx, name: String, seconds: Double): Window = {
+    val before = ingest.commits.asScala.map(_.batchId).maxOption.getOrElse(-1L)
+    val files = published until published + perWindow
+    published += perWindow
+    val (due, sent) = publish(files)
+    val startMs = due.head
+    val ok = try { query.processAllAvailable(); true } catch {
       case e: Throwable => System.err.println(s"[perfbench] trickle query failed: $e"); false
     }
-    q.stop()
-    ctx.checks.op(ok, "trickle query")
-    val ps = q.recentProgress.toSeq
+    ctx.checks.op(ok, s"$name: trickle query")
+    val ps = query.recentProgress.toSeq.filter(_.batchId > before)
     val mine = topic.copy(files = files.map(topic.files), hwm = files.map(topic.hwm),
       dups = files.flatMap(topic.files).count(l => !seen.add(l)).toLong)
-    val fresh = Workload.freshness(ingest, ps, name, mine, due.toIndexedSeq)
+    val fresh = Workload.freshness(ingest, ps, tag, mine, due)
     val visibleAt = fresh.zip(due).map { case (f, d) => f.map(_ + d) }
-    val commitTimes = ingest.commits.asScala.toSeq.filter(_.tag == name).map(_.storeAtMs).sorted
-    val backlog = Stats.backlog(sent.toIndexedSeq, visibleAt, commitTimes)
+    val commitTimes = ingest.commits.asScala.toSeq
+      .filter(c => c.tag == tag && c.batchId > before).map(_.storeAtMs).sorted
+    val backlog = Stats.backlog(sent, visibleAt, commitTimes)
     ctx.checks.op(fresh.forall(_.isDefined), s"$name: every published file visible")
     ctx.checks.op(!Stats.backlogGrows(backlog), s"$name: backlog grows across the run ($backlog)")
     val lastVisible = visibleAt.flatten.maxOption.getOrElse(startMs + 1)
     if (ingest.tracer.enabled) {
-      Workload.traceStream(ctx, ingest, ps, name, mine)
+      Workload.traceStream(ctx, ingest, ps, tag, mine)
       ctx.rec.set("CdcPipeline.backlog_files_max", backlog.maxOption.getOrElse(0).toDouble)
       ctx.rec.set("CdcPipeline.generator_late_ms_max", due.zip(sent).map(x => x._2 - x._1).max.toDouble)
       ctx.rec.set("BucketedSnapshot.store_bytes_end", StoreStats.storeBytes(ingest.storeDir(root)).toDouble)
       ctx.rec.set("Sinks.bytes_written", StoreStats.bytes(root.resolve("sink")).toDouble)
     }
     val events = mine.files.flatten.distinct.size
+    System.err.println(s"[perfbench] $name: ${files.size} files; batches, rows/ms: ${batches(ps)}")
     Window(events / ((lastVisible - startMs) / 1000.0), fresh.flatten.map(_.toDouble),
       Workload.dataLatencies(ps))
   }
 
   /** Store and sink against the history plus every file published. */
   def verify(ctx: Ctx): Unit = {
+    stopQuery()
     val lines = history ++ topic.files.take(published).flatten.distinct
     val log = Workload.parsedLog(ctx.spark, topic, lines)
     ctx.checks.check(s"$root store = snapshot of the log")(
@@ -344,10 +394,16 @@ final class Trickle extends Workload {
     * same data directory.
     */
   override def traceExtras(ctx: Ctx): Unit = {
+    stopQuery()
     val lines = topic.files.flatten
     val t0 = System.nanoTime()
     Checks.benchReduce(Workload.parsedLog(ctx.spark, topic, lines))
     ctx.rec.set("Envelope.parse_rows_per_s", lines.size / Workload.secondsSince(t0))
+    // the read path runs on every core, as a report client's session would
+    val localDir = ctx.spark.sparkContext.getConf.get("spark.local.dir")
+    ctx.spark.stop()
+    ctx.spark = Main.session(ctx.work, ctx.cores, localDir)
+    ctx.probe.foreach(ctx.spark.sparkContext.addSparkListener)
     new ReadPath().traceReport(ctx)
   }
 }
