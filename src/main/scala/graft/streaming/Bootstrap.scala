@@ -15,7 +15,7 @@ import graft.cdc.Envelope
   * table copy through micro-batches would hold the stream at the snapshot
   * for hours, so the snapshot phase runs as ONE batch job (`seed`) and only
   * the tail streams (`startTail`). Both phases land in the same versioned
-  * store through the same marker+pointer commit protocol — the seed is
+  * store through the same [[Commit]] marker protocol — the seed is
   * batch `SeedVersion = -1`, strictly before every streaming batch id — so
   * each phase is replay-safe alone and the pair is replay-safe together.
   *

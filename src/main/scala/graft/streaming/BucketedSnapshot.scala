@@ -30,12 +30,11 @@ import graft.cdc.{CdcOps, Envelope}
   * ≤ v. A bucket whose keys all died still commits an (empty) version dir
   * — otherwise readers would fall back to its stale previous rows.
   *
-  * Exactly-once: the same marker-then-pointer protocol as
-  * [[IncrementalSnapshot]], adapted to many dirs per commit — all touched
-  * buckets' version dirs are moved into place BEFORE the global manifest
-  * marker is created, so the marker atomically commits the whole batch;
-  * readers and merges resolve versions through committed markers only,
-  * which makes half-moved crash leftovers invisible (orphan dirs are
+  * Exactly-once: one [[Commit]] marker per batch, adapted to many dirs per
+  * commit — all touched buckets' version dirs are moved into place BEFORE
+  * the marker is created, so the marker atomically commits the whole
+  * batch; readers and merges resolve versions through committed markers
+  * only, which makes half-moved crash leftovers invisible (orphan dirs are
   * overwritten by the replay). The bucket count is pinned in a `_BUCKETS`
   * file at creation — a store's bucketing is part of its identity (changing
   * it means a rewrite), exactly like a bucketed Hive/Iceberg table.
@@ -61,20 +60,6 @@ object BucketedSnapshot {
   private def bucketsOf(dir: String): Option[Int] = {
     val p = Paths.get(dir, "_BUCKETS")
     if (Files.exists(p)) Files.readString(p).trim.toIntOption else None
-  }
-
-  /** Global commit markers — a marker is created only after every touched
-    * bucket's version dir is in place, so marker = batch fully committed.
-    */
-  private def committed(dir: String): Seq[Long] = {
-    val manifest = Paths.get(dir, "_manifest")
-    if (!Files.isDirectory(manifest)) Seq.empty
-    else {
-      val s = Files.list(manifest)
-      try s.iterator().asScala
-        .flatMap(p => p.getFileName.toString.toLongOption).toSeq
-      finally s.close()
-    }
   }
 
   /** Bucket b's version dirs as (version, compaction generation, path) —
@@ -142,7 +127,7 @@ object BucketedSnapshot {
     * mode).
     */
   private def committedPartFile(dir: String): Option[String] = {
-    val comm = committed(dir).toSet
+    val comm = Commit.versions(dir).toSet
     if (comm.isEmpty) None
     else allBuckets(dir).sorted.iterator
       .flatMap(b => bucketLatest(dir, b, comm, Long.MaxValue)
@@ -166,7 +151,7 @@ object BucketedSnapshot {
   }
 
   private def resolvePaths(dir: String, cap: Long): Seq[String] = {
-    val comm = committed(dir).toSet
+    val comm = Commit.versions(dir).toSet
     allBuckets(dir).flatMap { b =>
       bucketLatest(dir, b, comm, cap)
         .flatMap(v => bucketStateDir(dir, b, v))
@@ -174,7 +159,7 @@ object BucketedSnapshot {
     }
   }
 
-  def latestVersion(dir: String): Option[Long] = committed(dir).maxOption
+  def latestVersion(dir: String): Option[Long] = Commit.latest(dir)
 
   /** A stored version as the LIVE-ROWS view: retention-mode stores keep
     * delete tombstones as rows (op='d') so redelivered pre-tombstone
@@ -200,7 +185,7 @@ object BucketedSnapshot {
     * apart (the [[IncrementalSnapshot]] contract).
     */
   def readSnapshotAsOf(s: SparkSession, dir: String, v: Long): Option[DataFrame] = {
-    if (!committed(dir).exists(_ <= v)) None
+    if (!Commit.versions(dir).exists(_ <= v)) None
     else if (horizon(dir).exists(v < _)) None // vacuumed away
     else {
       val paths = resolvePaths(dir, v)
@@ -233,7 +218,7 @@ object BucketedSnapshot {
       bucketsOf(dir).map { nb =>
         val touched = keys.select(bucketOf(keyCols, nb).as("b")).distinct()
           .collect().map(_.getLong(0)).toSet
-        val comm = committed(dir).toSet
+        val comm = Commit.versions(dir).toSet
         val paths = allBuckets(dir).filter(touched.contains).flatMap { b =>
           bucketLatest(dir, b, comm, cap)
             .flatMap(v => bucketStateDir(dir, b, v))
@@ -292,7 +277,7 @@ object BucketedSnapshot {
     */
   def vacuum(dir: String, keep: Int): Seq[(Long, Long)] = {
     require(keep >= 1, "vacuum must keep at least the latest version")
-    val comm = committed(dir).sorted
+    val comm = Commit.versions(dir)
     if (comm.size <= keep) return Seq.empty
     val cutoff = comm.takeRight(keep).head
     val commSet = comm.toSet
@@ -343,7 +328,7 @@ object BucketedSnapshot {
     */
   def compact(s: SparkSession, dir: String,
       targetBytes: Long = 128L << 20): Seq[(Long, Long)] = {
-    val comm = committed(dir).toSet
+    val comm = Commit.versions(dir).toSet
     if (comm.isEmpty) return Seq.empty
     val staging = Paths.get(dir, "_compact_stage")
     deleteRecursively(staging) // crash leftovers from a prior attempt
@@ -448,100 +433,81 @@ object BucketedSnapshot {
     require(storedMode == mode,
       s"store was created in $storedMode mode, caller asked for $mode — " +
         "tombstone handling is fixed at store creation (changing it is a rewrite)")
-    val manifest = Paths.get(dir, "_manifest")
-    Files.createDirectories(manifest)
-    val marker = manifest.resolve(batchId.toString)
-    if (Files.exists(marker)) {
-      if (!IncrementalSnapshot.pointerVersion(dir).exists(_ >= batchId))
-        IncrementalSnapshot.flipLatest(dir, batchId)
-      return
+    // an empty batch still commits (replay bookkeeping)
+    Commit.once(dir, batchId) {
+      val s = batch.sparkSession
+      val comm = Commit.versions(dir).filter(_ < batchId).toSet
+      // touched buckets: one bounded collect (≤ #buckets rows), unless the
+      // caller already knows the set
+      val touched = knownTouched.getOrElse(
+        batch.select(bucketOf(keyCols, nb).as("b")).distinct()
+          .collect().map(_.getLong(0)).toSeq).sorted
+      if (touched.nonEmpty) {
+        // state resolves through the SAME generation-aware path as readers —
+        // a compacted bucket's referenced version lives in v=N.cG, and reading
+        // the plain v=N here would silently merge against EMPTY state
+        val statePaths = touched.flatMap { b =>
+          bucketLatest(dir, b, comm, batchId - 1)
+            .flatMap(v => bucketStateDir(dir, b, v))
+            .toSeq.flatMap(partFiles)
+        }
+        // state schema is fixed at store creation (_SCHEMA, written below on
+        // the first merge) — pass it to the reader so every subsequent merge
+        // skips the footer-sampling schema-inference job (~0.2 s/merge of
+        // driver-side I/O at sf0.1, and a listing-scale cost at 100 TB; r15)
+        val knownSchema = storedSchema(dir)
+        def stateRaw = if (statePaths.isEmpty) None
+          else Some(knownSchema.map(s.read.schema(_)).getOrElse(s.read)
+            .parquet(statePaths: _*))
+        val merged = tombstoneRetention match {
+          case None =>
+            val state = stateRaw
+              .map(_.withColumn("op", lit("r")).withColumn("sign", lit(1)))
+            val all = state.map(batch.unionByName(_)).getOrElse(batch)
+            CdcOps.snapshotLatest(all, keyCols, "ts_ms", payloadCols)
+          case Some(ret) =>
+            // state rows already carry op + ts_ms; sign is derivable from op,
+            // so the union drops it and logCompact keys retention off op alone
+            val b = batch.drop("sign")
+            val all = stateRaw.map(b.unionByName(_)).getOrElse(b)
+            CdcOps.logCompact(all, keyCols, "ts_ms", payloadCols, ret)
+        }
+        val next = merged.withColumn("bucket", bucketOf(keyCols, nb))
+        val schemaFile = Paths.get(dir, "_SCHEMA")
+        if (!Files.exists(schemaFile))
+          Files.writeString(schemaFile,
+            StructType(next.schema.filterNot(_.name == "bucket")).json)
+        val stage = Paths.get(dir, s"_stage/$batchId")
+        deleteRecursively(stage)
+        // Cluster the write by bucket (explicit partition count — AQE does
+        // not re-coalesce a numbered repartition) so every touched bucket
+        // commits as ONE part file instead of one file per write task (guide
+        // §6 output sizing: the r15 store accumulated 4 files per bucket per
+        // version at 32 cores — 512 files after 8 merges — and every
+        // subsequent merge/read paid the per-file open+footer cost;
+        // file-per-bucket is also exactly the layout [[compact]] converges
+        // to). The extra exchange moves only the touched buckets' merged
+        // state, the same rows the write emits.
+        // `spark.graft.clusterStoreWrites=false` is the spec seam that
+        // restores task-parallel (fragmented) version dirs — [[compact]]
+        // must handle stores written by engines without this clustering.
+        val clustered =
+          if (s.conf.getOption("spark.graft.clusterStoreWrites")
+              .forall(_.toBoolean)) next.repartition(nb, col("bucket"))
+          else next
+        clustered.write.mode("overwrite").partitionBy("bucket")
+          .parquet(stage.toString)
+        touched.foreach { b =>
+          val src = stage.resolve(s"bucket=$b")
+          val target = Paths.get(dir, s"bucket=$b/v=$batchId")
+          deleteRecursively(target) // crash-replay leftovers
+          Files.createDirectories(target.getParent)
+          if (Files.isDirectory(src)) Files.move(src, target)
+          else Files.createDirectories(target) // bucket emptied: commit it empty
+        }
+        deleteRecursively(stage)
+      }
     }
-    val s = batch.sparkSession
-    val comm = committed(dir).filter(_ < batchId).toSet
-    val dbg = sys.env.contains("SPARK_GRAFT_DEBUG")
-    var tMark = System.nanoTime()
-    def mark(phase: String): Unit = if (dbg) {
-      val now = System.nanoTime()
-      System.err.println(f"[merge-debug] batch=$batchId $phase ${(now - tMark) / 1e9}%.2f s")
-      tMark = now
-    }
-    // touched buckets: one bounded collect (≤ #buckets rows), unless the
-    // caller already knows the set
-    val touched = knownTouched.getOrElse(
-      batch.select(bucketOf(keyCols, nb).as("b")).distinct()
-        .collect().map(_.getLong(0)).toSeq).sorted
-    mark("touched")
-    if (touched.isEmpty) { // empty batch still commits (replay bookkeeping)
-      Files.createFile(marker)
-      IncrementalSnapshot.flipLatest(dir, batchId)
-      return
-    }
-    // state resolves through the SAME generation-aware path as readers —
-    // a compacted bucket's referenced version lives in v=N.cG, and reading
-    // the plain v=N here would silently merge against EMPTY state
-    val statePaths = touched.flatMap { b =>
-      bucketLatest(dir, b, comm, batchId - 1)
-        .flatMap(v => bucketStateDir(dir, b, v))
-        .toSeq.flatMap(partFiles)
-    }
-    // state schema is fixed at store creation (_SCHEMA, written below on
-    // the first merge) — pass it to the reader so every subsequent merge
-    // skips the footer-sampling schema-inference job (~0.2 s/merge of
-    // driver-side I/O at sf0.1, and a listing-scale cost at 100 TB; r15)
-    val knownSchema = storedSchema(dir)
-    def stateRaw = if (statePaths.isEmpty) None
-      else Some(knownSchema.map(s.read.schema(_)).getOrElse(s.read)
-        .parquet(statePaths: _*))
-    val merged = tombstoneRetention match {
-      case None =>
-        val state = stateRaw
-          .map(_.withColumn("op", lit("r")).withColumn("sign", lit(1)))
-        val all = state.map(batch.unionByName(_)).getOrElse(batch)
-        CdcOps.snapshotLatest(all, keyCols, "ts_ms", payloadCols)
-      case Some(ret) =>
-        // state rows already carry op + ts_ms; sign is derivable from op,
-        // so the union drops it and logCompact keys retention off op alone
-        val b = batch.drop("sign")
-        val all = stateRaw.map(b.unionByName(_)).getOrElse(b)
-        CdcOps.logCompact(all, keyCols, "ts_ms", payloadCols, ret)
-    }
-    val next = merged.withColumn("bucket", bucketOf(keyCols, nb))
-    val schemaFile = Paths.get(dir, "_SCHEMA")
-    if (!Files.exists(schemaFile))
-      Files.writeString(schemaFile,
-        StructType(next.schema.filterNot(_.name == "bucket")).json)
-    val stage = Paths.get(dir, s"_stage/$batchId")
-    deleteRecursively(stage)
-    mark("plan")
-    // Cluster the write by bucket (explicit partition count — AQE does not
-    // re-coalesce a numbered repartition) so every touched bucket commits as
-    // ONE part file instead of one file per write task (guide §6 output
-    // sizing: the r15 store accumulated 4 files per bucket per version at 32
-    // cores — 512 files after 8 merges — and every subsequent merge/read
-    // paid the per-file open+footer cost; file-per-bucket is also exactly
-    // the layout [[compact]] converges to). The extra exchange moves only
-    // the touched buckets' merged state, the same rows the write emits.
-    // `spark.graft.clusterStoreWrites=false` is the spec seam that restores
-    // task-parallel (fragmented) version dirs — [[compact]] must handle
-    // stores written by engines without this clustering.
-    val clustered =
-      if (s.conf.getOption("spark.graft.clusterStoreWrites")
-          .forall(_.toBoolean)) next.repartition(nb, col("bucket"))
-      else next
-    clustered.write.mode("overwrite").partitionBy("bucket")
-      .parquet(stage.toString)
-    mark("write")
-    touched.foreach { b =>
-      val src = stage.resolve(s"bucket=$b")
-      val target = Paths.get(dir, s"bucket=$b/v=$batchId")
-      deleteRecursively(target) // crash-replay leftovers
-      Files.createDirectories(target.getParent)
-      if (Files.isDirectory(src)) Files.move(src, target)
-      else Files.createDirectories(target) // bucket emptied: commit it empty
-    }
-    deleteRecursively(stage)
-    Files.createFile(marker)
-    IncrementalSnapshot.flipLatest(dir, batchId)
   }
 
   /** Stream a CDC source into a maintained bucketed snapshot directory. */

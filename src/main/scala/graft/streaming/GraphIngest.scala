@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -15,7 +14,7 @@ import graft.operators.{Scale, Similarity}
   * of two proven pieces (the reference has no ANN surface at all; this is
   * the scale mandate speaking):
   *
-  *   - [[IvfIngest]]'s ingestion shape: per-batch manifest markers
+  *   - [[IvfIngest]]'s ingestion shape: per-batch [[Commit]] markers
   *     (idempotent, replay-safe), cell assignment against the SAME trained
   *     coarse quantizer the batch index uses (map-side codegen argmax,
   *     zero re-training), a cell-partitioned vector store.
@@ -36,10 +35,9 @@ import graft.operators.{Scale, Similarity}
   *     O(n·k²) descent work.
   *
   * Commit protocol: each batch writes a FULL edge version under
-  * `edges/v<batchId>` and atomically flips the `_current` pointer — a
-  * reader always sees one consistent graph version (the
-  * IncrementalSnapshot pointer-flip convention); a replayed batch hits its
-  * manifest marker and re-flips to the identical content.
+  * `edges/v<batchId>` and commits it through [[Commit]] — a reader always
+  * sees the newest committed graph version, and a replayed batch is a
+  * no-op.
   *
   * What the confined repair gives up vs the batch build's global descent
   * is measured, not assumed: GraphIngestSpec ingests the sf0.001 corpus in
@@ -60,7 +58,7 @@ object GraphIngest {
   val DescentRoundsPerBatch = 2
 
   /** Ingest every parquet file in `srcDir` as micro-batches, maintaining
-    * vectors + edges + the `_current` pointer under `storeDir`.
+    * vectors + committed edge versions under `storeDir`.
     */
   def ingest(s: SparkSession, d: String, srcDir: String, storeDir: String,
       filesPerBatch: Int = 2): Unit = {
@@ -81,28 +79,13 @@ object GraphIngest {
     * (cos desc, dst) — same contract as the batch `knn_graph` edge set.
     */
   def graph(s: SparkSession, storeDir: String): DataFrame = {
-    val v = pointerVersion(storeDir)
+    val v = Commit.latest(storeDir)
     require(v.isDefined, s"no committed graph version under $storeDir")
     s.read.parquet(s"$storeDir/edges/v${v.get}")
   }
 
-  /** toLongOption: an interrupted pointer write must read as "no pointer",
-    * never wedge the stream on parse (the IncrementalSnapshot rule).
-    */
-  private[streaming] def pointerVersion(storeDir: String): Option[Long] = {
-    val p = Paths.get(storeDir, "_current")
-    if (Files.exists(p)) Files.readString(p).trim.toLongOption else None
-  }
-
-  private def flipCurrent(storeDir: String, v: Long): Unit = {
-    val tmp = Paths.get(storeDir, "_current.tmp")
-    Files.writeString(tmp, v.toString)
-    Files.move(tmp, Paths.get(storeDir, "_current"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
-
   private def currentEdges(s: SparkSession, storeDir: String): DataFrame =
-    if (pointerVersion(storeDir).isDefined)
+    if (Commit.latest(storeDir).isDefined)
       graph(s, storeDir).select(col("src"), col("dst"), col("cos"))
     else {
       import s.implicits._
@@ -119,120 +102,108 @@ object GraphIngest {
 
   private def processBatch(s: SparkSession, d: String, storeDir: String,
       batch: DataFrame, id: Long): Unit = {
-    val manifest = Paths.get(storeDir, "_manifest")
-    Files.createDirectories(manifest)
-    val marker = manifest.resolve(id.toString)
-    // Commit protocol (IncrementalSnapshot order): write edges/v<id> →
-    // create marker → flip _current. A replay after any crash either sees
-    // no marker (pointer still at the previous version, so `prev` below is
-    // the correct pre-batch state and the rewrite is identical) or sees
-    // the marker and only repairs the pointer. Flipping BEFORE the marker
-    // would make a replayed batch read its own output as `prev` and
-    // duplicate every new node's edge list.
-    if (Files.exists(marker)) {
-      if (!pointerVersion(storeDir).exists(_ >= id)) flipCurrent(storeDir, id)
-      return
-    }
+    // `prev` below reads the newest COMMITTED version, so a replay after a
+    // crash before the marker sees the correct pre-batch state and rewrites
+    // identical content
+    Commit.once(storeDir, id) {
+      // 1. cell-assign the batch against the trained quantizer and append it
+      //    to the cell-partitioned vector store (the IvfIngest layout)
+      val assigned = Similarity.assignCells(
+          batch.select(col("vec_id"), toDouble(col("embedding")).as("v")), s, d)
+        .select(col("vec_id"), col("v"), col("cell"))
+        .transform(Scale.materialize) // feeds the write, the probe side, and the anti-join
+      assigned.write.mode("overwrite").partitionBy("cell")
+        .parquet(s"$storeDir/vectors/batch=$id")
 
-    // 1. cell-assign the batch against the trained quantizer and append it
-    //    to the cell-partitioned vector store (the IvfIngest layout)
-    val assigned = Similarity.assignCells(
-        batch.select(col("vec_id"), toDouble(col("embedding")).as("v")), s, d)
-      .select(col("vec_id"), col("v"), col("cell"))
-      .transform(Scale.materialize) // feeds the write, the probe side, and the anti-join
-    assigned.write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$storeDir/vectors/batch=$id")
+      // 2. candidates for NEW nodes: multi-probe cells × the cell-assigned
+      //    corpus INCLUDING this batch (new↔new pairs surface here too)
+      val corpus = s.read.parquet(s"$storeDir/vectors")
+        .select(col("vec_id").as("dst"), col("v").as("dv"), col("cell"))
+      val cc = Similarity.centColsFor(s, d)
+      val probes = cc.cleanup(cc.attach(assigned.select(col("vec_id"), col("v")))
+          .withColumn("cell", explode(NativeVector.argTopKDot(
+            col("v"), cc.flat, cc.sn, lit(Similarity.GraphProbe)))))
+        .select(col("vec_id").as("src"), col("v").as("qv"), col("cell"))
+      val newEdges = topK(probes.join(corpus, "cell")
+          .filter(col("src") =!= col("dst"))
+          .withColumn("cos", NativeVector.cosine(col("qv"), col("dv")))
+          .select(col("src"), col("dst"), col("cos")))
+        .transform(Scale.materialize) // consumed by reverse-offer AND the final union
 
-    // 2. candidates for NEW nodes: multi-probe cells × the cell-assigned
-    //    corpus INCLUDING this batch (new↔new pairs surface here too)
-    val corpus = s.read.parquet(s"$storeDir/vectors")
-      .select(col("vec_id").as("dst"), col("v").as("dv"), col("cell"))
-    val cc = Similarity.centColsFor(s, d)
-    val probes = cc.cleanup(cc.attach(assigned.select(col("vec_id"), col("v")))
-        .withColumn("cell", explode(NativeVector.argTopKDot(
-          col("v"), cc.flat, cc.sn, lit(Similarity.GraphProbe)))))
-      .select(col("vec_id").as("src"), col("v").as("qv"), col("cell"))
-    val newEdges = topK(probes.join(corpus, "cell")
-        .filter(col("src") =!= col("dst"))
-        .withColumn("cos", NativeVector.cosine(col("qv"), col("dv")))
-        .select(col("src"), col("dst"), col("cos")))
-      .transform(Scale.materialize) // consumed by reverse-offer AND the final union
+      // 3. touched-node repair, phase 1: offer each (new → old) edge in
+      //    reverse to the old node and re-rank ONLY those nodes' lists
+      val prev = currentEdges(s, storeDir)
+      val reverseOffers = newEdges
+        .select(col("dst").as("src"), col("src").as("dst"), col("cos"))
+        .join(assigned.select(col("vec_id").as("src")), Seq("src"), "left_anti")
+        .transform(Scale.materialize) // touched-id frame + repair input
+      val touched = reverseOffers.select(col("src")).distinct()
+      val repaired = topK(
+        prev.join(touched, Seq("src"), "left_semi")
+          .unionByName(reverseOffers)
+          // an offered pair can already sit in the old list (a replayed
+          // vector, or symmetric discovery in an earlier batch) — exact
+          // duplicate rows, collapsed before ranking
+          .dropDuplicates("src", "dst"))
+      val merged = prev.join(touched, Seq("src"), "left_anti")
+        .unionByName(repaired)
+        .unionByName(newEdges)
+        .transform(Scale.materialize) // scanned by all three descent stages
 
-    // 3. touched-node repair, phase 1: offer each (new → old) edge in
-    //    reverse to the old node and re-rank ONLY those nodes' lists
-    val prev = currentEdges(s, storeDir)
-    val reverseOffers = newEdges
-      .select(col("dst").as("src"), col("src").as("dst"), col("cos"))
-      .join(assigned.select(col("vec_id").as("src")), Seq("src"), "left_anti")
-      .transform(Scale.materialize) // touched-id frame + repair input
-    val touched = reverseOffers.select(col("src")).distinct()
-    val repaired = topK(
-      prev.join(touched, Seq("src"), "left_semi")
-        .unionByName(reverseOffers)
-        // an offered pair can already sit in the old list (a replayed
-        // vector, or symmetric discovery in an earlier batch) — exact
-        // duplicate rows, collapsed before ranking
-        .dropDuplicates("src", "dst"))
-    val merged = prev.join(touched, Seq("src"), "left_anti")
-      .unionByName(repaired)
-      .unionByName(newEdges)
-      .transform(Scale.materialize) // scanned by all three descent stages
-
-    // 3b. phase 2 — [[DescentRoundsPerBatch]] NN-descent rounds
-    //     (knnGraphRounds' expansion) CONFINED to the AFFECTED set (this
-    //     batch's nodes + touched): neighbor-of-neighbor candidates
-    //     through the symmetrized edge set, rescored and merged into
-    //     affected lists only. Per round per batch: the edge store is
-    //     scanned map-side (the affected/neighbor id sets broadcast into
-    //     semi-joins — no big-side shuffle) and the rescoring join touches
-    //     O(|affected|·(2K)²) id-keyed rows. A new node reaches cross-cell
-    //     true neighbors through a touched old node's list here — the
-    //     repair the cell-confined candidates cannot make alone (measured
-    //     at sf0.001: without this phase the maintained graph agreed with
-    //     only 0.62 of the batch edge set; with it, TRUE recall@5 lands at
-    //     0.648 vs the batch rebuild's 0.687 — GraphIngestSpec's gate).
-    val affected = touched
-      .unionByName(assigned.select(col("vec_id").as("src")))
-      .transform(Scale.materialize)
-    val vecs = corpus.select(col("dst").as("vid"), col("dv"))
-    var edges = merged
-    for (_ <- 1 to DescentRoundsPerBatch) {
-      // (a, b): affected node → its neighbors, both edge orientations
-      val symA = edges.join(broadcast(affected), Seq("src"), "left_semi")
-        .select(col("src").as("a"), col("dst").as("b"))
-        .unionByName(edges
-          .join(broadcast(affected.select(col("src").as("dst"))), Seq("dst"), "left_semi")
-          .select(col("dst").as("a"), col("src").as("b")))
+      // 3b. phase 2 — [[DescentRoundsPerBatch]] NN-descent rounds
+      //     (knnGraphRounds' expansion) CONFINED to the AFFECTED set (this
+      //     batch's nodes + touched): neighbor-of-neighbor candidates
+      //     through the symmetrized edge set, rescored and merged into
+      //     affected lists only. Per round per batch: the edge store is
+      //     scanned map-side (the affected/neighbor id sets broadcast into
+      //     semi-joins — no big-side shuffle) and the rescoring join touches
+      //     O(|affected|·(2K)²) id-keyed rows. A new node reaches cross-cell
+      //     true neighbors through a touched old node's list here — the
+      //     repair the cell-confined candidates cannot make alone (measured
+      //     at sf0.001: without this phase the maintained graph agreed with
+      //     only 0.62 of the batch edge set; with it, TRUE recall@5 lands at
+      //     0.648 vs the batch rebuild's 0.687 — GraphIngestSpec's gate).
+      val affected = touched
+        .unionByName(assigned.select(col("vec_id").as("src")))
         .transform(Scale.materialize)
-      val nbrs = symA.select(col("b")).distinct().transform(Scale.materialize)
-      // (b, c): those neighbors' own neighborhoods, both orientations
-      val symB = edges
-        .join(broadcast(nbrs.select(col("b").as("src"))), Seq("src"), "left_semi")
-        .select(col("src").as("b"), col("dst").as("c"))
-        .unionByName(edges
-          .join(broadcast(nbrs.select(col("b").as("dst"))), Seq("dst"), "left_semi")
-          .select(col("dst").as("b"), col("src").as("c")))
-      val affEdges = edges
-        .join(broadcast(affected), Seq("src"), "left_semi")
-        .transform(Scale.materialize) // anti-join base + final re-rank input
-      val cand = symA.join(symB, "b")
-        .filter(col("a") =!= col("c"))
-        .select(col("a").as("src"), col("c").as("dst")).distinct()
-        .join(affEdges.select(col("src"), col("dst")), Seq("src", "dst"), "left_anti")
-      val descScored = cand
-        .join(vecs.select(col("vid").as("src"), col("dv").as("sv")), "src")
-        .join(vecs.select(col("vid").as("dst"), col("dv").as("tv")), "dst")
-        .withColumn("cos", NativeVector.cosine(col("sv"), col("tv")))
-        .select(col("src"), col("dst"), col("cos"))
-      edges = edges.join(broadcast(affected), Seq("src"), "left_anti")
-        .unionByName(topK(affEdges.unionByName(descScored)))
-        .transform(Scale.materialize)
-    }
-    val next = edges
+      val vecs = corpus.select(col("dst").as("vid"), col("dv"))
+      var edges = merged
+      for (_ <- 1 to DescentRoundsPerBatch) {
+        // (a, b): affected node → its neighbors, both edge orientations
+        val symA = edges.join(broadcast(affected), Seq("src"), "left_semi")
+          .select(col("src").as("a"), col("dst").as("b"))
+          .unionByName(edges
+            .join(broadcast(affected.select(col("src").as("dst"))), Seq("dst"), "left_semi")
+            .select(col("dst").as("a"), col("src").as("b")))
+          .transform(Scale.materialize)
+        val nbrs = symA.select(col("b")).distinct().transform(Scale.materialize)
+        // (b, c): those neighbors' own neighborhoods, both orientations
+        val symB = edges
+          .join(broadcast(nbrs.select(col("b").as("src"))), Seq("src"), "left_semi")
+          .select(col("src").as("b"), col("dst").as("c"))
+          .unionByName(edges
+            .join(broadcast(nbrs.select(col("b").as("dst"))), Seq("dst"), "left_semi")
+            .select(col("dst").as("b"), col("src").as("c")))
+        val affEdges = edges
+          .join(broadcast(affected), Seq("src"), "left_semi")
+          .transform(Scale.materialize) // anti-join base + final re-rank input
+        val cand = symA.join(symB, "b")
+          .filter(col("a") =!= col("c"))
+          .select(col("a").as("src"), col("c").as("dst")).distinct()
+          .join(affEdges.select(col("src"), col("dst")), Seq("src", "dst"), "left_anti")
+        val descScored = cand
+          .join(vecs.select(col("vid").as("src"), col("dv").as("sv")), "src")
+          .join(vecs.select(col("vid").as("dst"), col("dv").as("tv")), "dst")
+          .withColumn("cos", NativeVector.cosine(col("sv"), col("tv")))
+          .select(col("src"), col("dst"), col("cos"))
+        edges = edges.join(broadcast(affected), Seq("src"), "left_anti")
+          .unionByName(topK(affEdges.unionByName(descScored)))
+          .transform(Scale.materialize)
+      }
+      val next = edges
 
-    // 4. commit: full version write → marker → atomic pointer flip
-    next.write.mode("overwrite").parquet(s"$storeDir/edges/v$id")
-    Files.createFile(marker)
-    flipCurrent(storeDir, id)
+      // 4. full version write; Commit.once then creates the marker
+      next.write.mode("overwrite").parquet(s"$storeDir/edges/v$id")
+    }
   }
 }

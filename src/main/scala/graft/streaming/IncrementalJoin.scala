@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -24,11 +23,10 @@ import graft.cdc.Envelope
   * touched set (rows removed) and absent from its snapshot (nothing
   * re-added).
   *
-  * The join store commits with the same marker + pointer protocol as the
-  * snapshot store: replays are no-ops, a crash between marker and flip
-  * self-repairs, and a crash between the side-merges and the join commit
-  * replays deterministically (the side merges are themselves no-ops on
-  * replay, so the recompute sees the identical S′ and Δ).
+  * The join store commits through [[Commit]] like the snapshot stores:
+  * replays are no-ops, and a crash between the side-merges and the join
+  * commit replays deterministically (the side merges are themselves
+  * no-ops on replay, so the recompute sees the identical S′ and Δ).
   */
 object IncrementalJoin {
 
@@ -43,42 +41,33 @@ object IncrementalJoin {
     IncrementalSnapshot.merge(aDir, Seq("id"), aPayload)(aBatch, batchId)
     IncrementalSnapshot.merge(bDir, Seq("id"), bPayload)(bBatch, batchId)
 
-    val manifest = Paths.get(jDir, "_manifest")
-    Files.createDirectories(manifest)
-    val marker = manifest.resolve(batchId.toString)
-    if (Files.exists(marker)) {
-      if (!IncrementalSnapshot.pointerVersion(jDir).exists(_ >= batchId))
-        IncrementalSnapshot.flipLatest(jDir, batchId)
-      return
+    Commit.once(jDir, batchId) {
+      val sa = IncrementalSnapshot.readSnapshot(s, aDir)
+        .getOrElse(throw new IllegalStateException(s"no snapshot at $aDir"))
+      val sb0 = IncrementalSnapshot.readSnapshot(s, bDir)
+        .getOrElse(throw new IllegalStateException(s"no snapshot at $bDir"))
+      val sb = sb0.toDF(sb0.columns.map("b_" + _): _*)
+      val ka = aBatch.select(col("id")).distinct()
+      val kb = bBatch.select(col("id").as("b_id")).distinct()
+
+      val prev = Commit.before(jDir, batchId)
+        .map(v => s.read.parquet(s"$jDir/v=$v"))
+      val untouched = prev.map(_
+        .join(broadcast(ka), Seq("id"), "left_anti")
+        .join(broadcast(kb), Seq("b_id"), "left_anti"))
+      val addA = sa.join(broadcast(ka), Seq("id"), "left_semi")
+        .join(sb, col(joinACol) === col("b_id"))
+      val addB = sa.join(broadcast(ka), Seq("id"), "left_anti")
+        .join(sb.join(broadcast(kb), Seq("b_id"), "left_semi"),
+          col(joinACol) === col("b_id"))
+      val j = untouched.map(_.unionByName(addA).unionByName(addB))
+        .getOrElse(addA.unionByName(addB))
+        // canonical column order: a USING-column anti join moves its key to
+        // the front, and the store's schema must not drift across versions
+        .select(addA.columns.map(col).toIndexedSeq: _*)
+
+      j.write.mode("overwrite").parquet(s"$jDir/v=$batchId")
     }
-
-    val sa = IncrementalSnapshot.readSnapshot(s, aDir)
-      .getOrElse(throw new IllegalStateException(s"no snapshot at $aDir"))
-    val sb0 = IncrementalSnapshot.readSnapshot(s, bDir)
-      .getOrElse(throw new IllegalStateException(s"no snapshot at $bDir"))
-    val sb = sb0.toDF(sb0.columns.map("b_" + _): _*)
-    val ka = aBatch.select(col("id")).distinct()
-    val kb = bBatch.select(col("id").as("b_id")).distinct()
-
-    val prev = IncrementalSnapshot.versionBefore(jDir, batchId)
-      .map(v => s.read.parquet(s"$jDir/v=$v"))
-    val untouched = prev.map(_
-      .join(broadcast(ka), Seq("id"), "left_anti")
-      .join(broadcast(kb), Seq("b_id"), "left_anti"))
-    val addA = sa.join(broadcast(ka), Seq("id"), "left_semi")
-      .join(sb, col(joinACol) === col("b_id"))
-    val addB = sa.join(broadcast(ka), Seq("id"), "left_anti")
-      .join(sb.join(broadcast(kb), Seq("b_id"), "left_semi"),
-        col(joinACol) === col("b_id"))
-    val j = untouched.map(_.unionByName(addA).unionByName(addB))
-      .getOrElse(addA.unionByName(addB))
-      // canonical column order: a USING-column anti join moves its key to
-      // the front, and the store's schema must not drift across versions
-      .select(addA.columns.map(col).toIndexedSeq: _*)
-
-    j.write.mode("overwrite").parquet(s"$jDir/v=$batchId")
-    Files.createFile(marker)
-    IncrementalSnapshot.flipLatest(jDir, batchId)
   }
 
   def readJoin(s: SparkSession, jDir: String): Option[DataFrame] =

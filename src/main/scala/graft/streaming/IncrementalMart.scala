@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -29,18 +28,18 @@ import graft.cdc.Envelope
   * the batch aggregate regardless of addition order (proved in
   * IncrementalMartSpec).
   *
-  * Exactly-once: the same version-dir + manifest-marker + _LATEST protocol
-  * as IncrementalSnapshot, committed AFTER the snapshot's own commit — a
-  * crash between the two replays the batch, whose snapshot merge no-ops and
-  * whose mart delta re-reads the SAME two immutable version dirs
-  * (versionBefore, not the already-moved pointer), landing the identical
-  * mart. Ref: init-clickhouse.sql (the mart tables), daily_report.py (the
+  * Exactly-once: one `v=<batchId>` mart version per batch, committed
+  * through [[Commit]] AFTER the snapshot's own commit — a crash between
+  * the two replays the batch, whose snapshot merge no-ops and whose mart
+  * delta re-reads the SAME two immutable version dirs (`Commit.before`,
+  * not the snapshot's latest), landing the identical mart.
+  * Ref: init-clickhouse.sql (the mart tables), daily_report.py (the
   * report this keeps perpetually fresh).
   */
 object IncrementalMart {
 
   def readMart(s: SparkSession, dir: String): Option[DataFrame] =
-    IncrementalSnapshot.latestVersion(dir).map(v => s.read.parquet(s"$dir/v=$v"))
+    Commit.readLatest(s, dir)
 
   /** foreachBatch body: merge the batch into the snapshot, then fold the
     * touched-key delta into the stored mart.
@@ -49,39 +48,31 @@ object IncrementalMart {
       payloadCols: Seq[String], groupCol: String, valueCol: String)
       (batch: DataFrame, batchId: Long): Unit = {
     IncrementalSnapshot.merge(snapDir, keyCols, payloadCols)(batch, batchId)
-    val manifest = Paths.get(martDir, "_manifest")
-    Files.createDirectories(manifest)
-    val marker = manifest.resolve(batchId.toString)
-    if (Files.exists(marker)) {
-      if (!IncrementalSnapshot.pointerVersion(martDir).exists(_ >= batchId))
-        IncrementalSnapshot.flipLatest(martDir, batchId)
-      return
+    Commit.once(martDir, batchId) {
+      val s = batch.sparkSession
+      val touched = batch.select(keyCols.map(col): _*).distinct()
+      def contrib(version: Option[Long], sign: Int): Option[DataFrame] =
+        version.map { v =>
+          s.read.parquet(s"$snapDir/v=$v")
+            .join(touched, keyCols, "left_semi")
+            .select(col(groupCol), lit(sign).as("sign"),
+              col(valueCol).cast("decimal(18,4)").as("val"))
+        }
+      val plus = contrib(Some(batchId), 1).get
+      val minus = contrib(Commit.before(snapDir, batchId), -1)
+      val delta = minus.map(plus.unionByName(_)).getOrElse(plus)
+        .groupBy(col(groupCol))
+        .agg(sum(col("sign")).cast("long").as("n"),
+          sum(col("sign") * col("val")).cast("decimal(18,4)").as("total"))
+      val merged = readMart(s, martDir)
+        .map(_.unionByName(delta))
+        .getOrElse(delta)
+        .groupBy(col(groupCol))
+        .agg(sum(col("n")).cast("long").as("n"),
+          sum(col("total")).cast("decimal(18,4)").as("total"))
+        .filter(col("n") > 0)
+      merged.write.mode("overwrite").parquet(s"$martDir/v=$batchId")
     }
-    val s = batch.sparkSession
-    val touched = batch.select(keyCols.map(col): _*).distinct()
-    def contrib(version: Option[Long], sign: Int): Option[DataFrame] =
-      version.map { v =>
-        s.read.parquet(s"$snapDir/v=$v")
-          .join(touched, keyCols, "left_semi")
-          .select(col(groupCol), lit(sign).as("sign"),
-            col(valueCol).cast("decimal(18,4)").as("val"))
-      }
-    val plus = contrib(Some(batchId), 1).get
-    val minus = contrib(IncrementalSnapshot.versionBefore(snapDir, batchId), -1)
-    val delta = minus.map(plus.unionByName(_)).getOrElse(plus)
-      .groupBy(col(groupCol))
-      .agg(sum(col("sign")).cast("long").as("n"),
-        sum(col("sign") * col("val")).cast("decimal(18,4)").as("total"))
-    val merged = readMart(s, martDir)
-      .map(_.unionByName(delta))
-      .getOrElse(delta)
-      .groupBy(col(groupCol))
-      .agg(sum(col("n")).cast("long").as("n"),
-        sum(col("total")).cast("decimal(18,4)").as("total"))
-      .filter(col("n") > 0)
-    merged.write.mode("overwrite").parquet(s"$martDir/v=$batchId")
-    Files.createFile(marker)
-    IncrementalSnapshot.flipLatest(martDir, batchId)
   }
 
   /** Stream a CDC source into a maintained (snapshot, mart) pair. */

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -23,52 +22,41 @@ import graft.cdc.{CdcOps, Envelope}
   * merge). Equality is proven in IncrementalScd2Spec; per-batch work is
   * O(batch + touched keys), never O(history).
   *
-  * Commit protocol, replay safety and pointer repair are EXACTLY
-  * IncrementalSnapshot's (write v=<batchId> → marker → pointer flip),
-  * reusing its primitives.
+  * Each batch writes a full `v=<batchId>` history version and commits it
+  * through [[Commit]], like [[IncrementalSnapshot]].
   */
 object IncrementalScd2 {
 
-  import IncrementalSnapshot.{pointerVersion, latestVersion, flipLatest}
-
   def readHistory(s: SparkSession, dir: String): Option[DataFrame] =
-    latestVersion(dir).map(v => s.read.parquet(s"$dir/v=$v"))
+    Commit.readLatest(s, dir)
 
   /** Merge one micro-batch of flattened signed change rows into the stored
     * SCD2 history.
     */
   def merge(dir: String, keyCols: Seq[String], payloadCols: Seq[String])
       (batch: DataFrame, batchId: Long): Unit = {
-    val manifest = Paths.get(dir, "_manifest")
-    Files.createDirectories(manifest)
-    val marker = manifest.resolve(batchId.toString)
-    if (Files.exists(marker)) {
-      if (!pointerVersion(dir).exists(_ >= batchId))
-        flipLatest(dir, batchId)
-      return
+    Commit.once(dir, batchId) {
+      val s = batch.sparkSession
+      val outCols = (keyCols ++ payloadCols).map(col) ++
+        Seq(col("valid_from"), col("valid_to"), col("is_current"))
+      val newParts = CdcOps.scd2(batch, keyCols, "ts_ms").select(outCols: _*)
+      val result = readHistory(s, dir) match {
+        case None => newParts
+        case Some(stored) =>
+          // close each touched key's open interval at the batch's first event
+          // for that key — exactly what lead() would have produced in the
+          // full-log scd2; untouched keys pass through byte-identical
+          val firstTs = batch.groupBy(keyCols.map(col): _*)
+            .agg(min(col("ts_ms")).as("_first_ts"))
+          val closing = col("is_current") === 1 && col("_first_ts").isNotNull
+          stored.join(firstTs, keyCols, "left")
+            .withColumn("valid_to", when(closing, col("_first_ts")).otherwise(col("valid_to")))
+            .withColumn("is_current", when(closing, lit(0)).otherwise(col("is_current")))
+            .drop("_first_ts")
+            .unionByName(newParts)
+      }
+      result.write.mode("overwrite").parquet(s"$dir/v=$batchId")
     }
-    val s = batch.sparkSession
-    val outCols = (keyCols ++ payloadCols).map(col) ++
-      Seq(col("valid_from"), col("valid_to"), col("is_current"))
-    val newParts = CdcOps.scd2(batch, keyCols, "ts_ms").select(outCols: _*)
-    val result = readHistory(s, dir) match {
-      case None => newParts
-      case Some(stored) =>
-        // close each touched key's open interval at the batch's first event
-        // for that key — exactly what lead() would have produced in the
-        // full-log scd2; untouched keys pass through byte-identical
-        val firstTs = batch.groupBy(keyCols.map(col): _*)
-          .agg(min(col("ts_ms")).as("_first_ts"))
-        val closing = col("is_current") === 1 && col("_first_ts").isNotNull
-        stored.join(firstTs, keyCols, "left")
-          .withColumn("valid_to", when(closing, col("_first_ts")).otherwise(col("valid_to")))
-          .withColumn("is_current", when(closing, lit(0)).otherwise(col("is_current")))
-          .drop("_first_ts")
-          .unionByName(newParts)
-    }
-    result.write.mode("overwrite").parquet(s"$dir/v=$batchId")
-    Files.createFile(marker)
-    flipLatest(dir, batchId)
   }
 
   /** Stream a CDC source into a maintained SCD2 history directory. */

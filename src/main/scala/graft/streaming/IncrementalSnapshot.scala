@@ -14,15 +14,11 @@ import graft.cdc.{CdcOps, Envelope}
   * snapshot: union(stored state, batch) → latest-version-per-key → drop
   * tombstones → write new snapshot version.
   *
-  * Exactly-once: versions are written to `v=<batchId>` directories, a
-  * `_LATEST` pointer is flipped after a successful write, and a per-batch
-  * manifest makes replays no-ops — re-running a failed batch rewrites the
-  * same version directory and flips the same pointer. The pointer is a
-  * cache, not the source of truth: if it is lost or unparseable (copied
-  * dir, old writer, filesystem without ATOMIC_MOVE), `latestVersion`
-  * recovers the max committed version from the manifest markers instead of
-  * silently treating the directory as fresh — which would merge the next
-  * batch against empty state and drop every prior key.
+  * Exactly-once: each batch writes its version to `v=<batchId>` and
+  * commits it through [[Commit]]; readers and the next merge resolve the
+  * latest version from the commit markers alone, so a crash before the
+  * marker leaves an orphan dir that is never read and that the replay
+  * overwrites.
   *
   * Scale: the merge is CdcOps.snapshotLatest (one shuffle, partial max_by).
   * The read-merge-rewrite of the full snapshot per batch is the simple
@@ -32,55 +28,7 @@ import graft.cdc.{CdcOps, Envelope}
   */
 object IncrementalSnapshot {
 
-  /** The _LATEST pointer alone, no recovery — merge's replay branch uses
-    * this to decide whether the pointer itself needs repair.
-    */
-  private[streaming] def pointerVersion(dir: String): Option[Long] = {
-    val p = Paths.get(dir, "_LATEST")
-    // toLongOption: an interrupted pointer write must read as "no pointer"
-    // (repairable via the manifest), never wedge the stream on parse
-    if (Files.exists(p)) Files.readString(p).trim.toLongOption else None
-  }
-
-  /** All committed versions: manifest markers whose `v=<id>` dir exists.
-    * The marker is created only after a successful snapshot write, so
-    * marker+dir = committed even when the pointer is gone.
-    */
-  private[streaming] def committedVersions(dir: String): Seq[Long] = {
-    val manifest = Paths.get(dir, "_manifest")
-    if (!Files.isDirectory(manifest)) Seq.empty
-    else {
-      val s = Files.list(manifest)
-      try s.iterator().asScala
-        .flatMap(p => p.getFileName.toString.toLongOption)
-        .filter(v => Files.isDirectory(Paths.get(dir, s"v=$v")))
-        .toSeq
-      finally s.close()
-    }
-  }
-
-  private def manifestVersion(dir: String): Option[Long] =
-    committedVersions(dir).maxOption
-
-  /** Latest committed version strictly BEFORE `id` — the pre-batch state a
-    * replayed batch must diff against even after the pointer moved on.
-    */
-  private[streaming] def versionBefore(dir: String, id: Long): Option[Long] =
-    committedVersions(dir).filter(_ < id).maxOption
-
-  def latestVersion(dir: String): Option[Long] =
-    pointerVersion(dir).orElse(manifestVersion(dir))
-
-  /** Atomic pointer flip: write-to-temp + ATOMIC_MOVE, so a crash mid-write
-    * can never leave a truncated/garbage _LATEST.
-    */
-  private[streaming] def flipLatest(dir: String, v: Long): Unit = {
-    val tmp = Paths.get(dir, s"_LATEST.tmp")
-    Files.writeString(tmp, v.toString)
-    Files.move(tmp, Paths.get(dir, "_LATEST"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  def latestVersion(dir: String): Option[Long] = Commit.latest(dir)
 
   /** A stored version as the LIVE-ROWS view: retention-mode stores keep
     * delete tombstones as rows (op='d') so redelivered pre-tombstone
@@ -95,7 +43,7 @@ object IncrementalSnapshot {
     * them as state.
     */
   private def readRaw(s: SparkSession, dir: String): Option[DataFrame] =
-    latestVersion(dir).map(v => s.read.parquet(s"$dir/v=$v"))
+    Commit.readLatest(s, dir)
 
   def readSnapshot(s: SparkSession, dir: String): Option[DataFrame] =
     readRaw(s, dir).map(liveView)
@@ -103,7 +51,7 @@ object IncrementalSnapshot {
   /** All committed versions, ascending — the store's time-travel index
     * (the DESCRIBE HISTORY role of a Delta/Iceberg table).
     */
-  def versions(dir: String): Seq[Long] = committedVersions(dir).sorted
+  def versions(dir: String): Seq[Long] = Commit.versions(dir)
 
   /** Time travel: the snapshot as of version `v` — the latest committed
     * version ≤ v (VERSION AS OF semantics; batch ids are the version line).
@@ -113,22 +61,20 @@ object IncrementalSnapshot {
     * in O(1) reads from the maintained store, at batch granularity.
     */
   def readSnapshotAsOf(s: SparkSession, dir: String, v: Long): Option[DataFrame] =
-    committedVersions(dir).filter(_ <= v).maxOption
+    versions(dir).filter(_ <= v).lastOption
       .map(x => liveView(s.read.parquet(s"$dir/v=$x")))
 
   /** Retention: drop all but the `keep` newest committed versions (marker
     * first, then the data dir — a crash between the two leaves an orphan
     * dir that is already invisible to readers, never a marker without
-    * data). The pointer's target is always retained. Returns the dropped
-    * version ids. The ReplacingMergeTree TTL/merge role for the store.
+    * data). Returns the dropped version ids. The ReplacingMergeTree
+    * TTL/merge role for the store.
     */
   def vacuum(dir: String, keep: Int): Seq[Long] = {
     require(keep >= 1, "vacuum must keep at least the latest version")
-    val all = committedVersions(dir).sorted
-    val pinned = pointerVersion(dir).toSet ++ all.takeRight(keep)
-    val drop = all.filterNot(pinned.contains)
+    val drop = versions(dir).dropRight(keep)
     drop.foreach { v =>
-      Files.deleteIfExists(Paths.get(dir, "_manifest", v.toString))
+      Commit.forget(dir, v)
       val data = Paths.get(dir, s"v=$v")
       val files = Files.walk(data)
       try files.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists)
@@ -156,39 +102,23 @@ object IncrementalSnapshot {
   def merge(dir: String, keyCols: Seq[String], payloadCols: Seq[String],
       tombstoneRetention: Option[Long] = None)
       (batch: DataFrame, batchId: Long): Unit = {
-    val manifest = Paths.get(dir, "_manifest")
-    Files.createDirectories(manifest)
-    val marker = manifest.resolve(batchId.toString)
-    // Commit protocol: write v=<batchId> → create marker → flip _LATEST.
-    // The marker is the commit record, created BEFORE the pointer flip: a
-    // replay after any crash either sees no marker (pointer still at the
-    // previous version, so the merge re-reads old state and rewrites
-    // v=<batchId> — never a read-from-overwritten-path) or sees the marker
-    // and only repairs the pointer if the crash hit between marker and flip.
-    if (Files.exists(marker)) {
-      // pointerVersion, not latestVersion: a lost/corrupt pointer must be
-      // REWRITTEN here, not merely recovered around
-      if (!pointerVersion(dir).exists(_ >= batchId))
-        flipLatest(dir, batchId)
-      return
+    Commit.once(dir, batchId) {
+      val s = batch.sparkSession
+      val next = tombstoneRetention match {
+        case None =>
+          val current = readSnapshot(s, dir)
+            .map(_.withColumn("op", lit("r")).withColumn("sign", lit(1)))
+          val all = current.map(batch.unionByName(_)).getOrElse(batch)
+          CdcOps.snapshotLatest(all, keyCols, "ts_ms", payloadCols)
+        case Some(ret) =>
+          // state rows already carry op + ts_ms; sign is derivable from op,
+          // so the union drops it and logCompact keys retention off op alone
+          val b = batch.drop("sign")
+          val all = readRaw(s, dir).map(b.unionByName(_)).getOrElse(b)
+          CdcOps.logCompact(all, keyCols, "ts_ms", payloadCols, ret)
+      }
+      next.write.mode("overwrite").parquet(s"$dir/v=$batchId")
     }
-    val s = batch.sparkSession
-    val next = tombstoneRetention match {
-      case None =>
-        val current = readSnapshot(s, dir)
-          .map(_.withColumn("op", lit("r")).withColumn("sign", lit(1)))
-        val all = current.map(batch.unionByName(_)).getOrElse(batch)
-        CdcOps.snapshotLatest(all, keyCols, "ts_ms", payloadCols)
-      case Some(ret) =>
-        // state rows already carry op + ts_ms; sign is derivable from op,
-        // so the union drops it and logCompact keys retention off op alone
-        val b = batch.drop("sign")
-        val all = readRaw(s, dir).map(b.unionByName(_)).getOrElse(b)
-        CdcOps.logCompact(all, keyCols, "ts_ms", payloadCols, ret)
-    }
-    next.write.mode("overwrite").parquet(s"$dir/v=$batchId")
-    Files.createFile(marker)
-    flipLatest(dir, batchId)
   }
 
   /** Stream a CDC source into a maintained snapshot directory. */

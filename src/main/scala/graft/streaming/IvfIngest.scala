@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -13,8 +12,8 @@ import graft.functions.VectorFunctions.toDouble
   * quantized into the SAME trained coarse cells the batch index uses
   * (`Similarity.assignCells` — a map-side codegen'd argmax over literal
   * centroids: zero shuffle, zero re-training per batch), then appended to
-  * a cell-partitioned store through the per-batch manifest (idempotent,
-  * replay-safe — the Sinks convention). Queries probe the store with
+  * a cell-partitioned store through [[Commit]] (idempotent, replay-safe —
+  * the Sinks convention). Queries probe the store with
   * partition pruning on `cell` and serve results identical to the batch
   * `knn_ivf` once ingestion catches up (proven in IvfIngestSpec).
   *
@@ -40,16 +39,12 @@ object IvfIngest {
       .parquet(srcDir)
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val manifest = Paths.get(storeDir, "_manifest")
-        Files.createDirectories(manifest)
-        val marker = manifest.resolve(id.toString)
-        if (!Files.exists(marker)) {
+        Commit.once(storeDir, id) {
           Similarity.assignCells(
               batch.select(col("vec_id"), toDouble(col("embedding")).as("v")), s, d)
             .select(col("vec_id"), col("v"), col("cell"))
             .write.mode("overwrite").partitionBy("cell")
             .parquet(s"$storeDir/data/batch=$id")
-          Files.createFile(marker)
         }
         ()
       }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -15,8 +14,8 @@ import graft.functions.VectorFunctions.toDouble
   * encoded into the SAME trained codebooks the batch `knn_pq` / `knn_opq`
   * queries use (`Similarity.pqEncodeFrame` / `opqEncodeFrame` — literal
   * codebooks in one map-side codegen'd native expression: zero shuffle,
-  * zero re-training per batch), and appended to a code store through the
-  * per-batch manifest (idempotent, replay-safe — the Sinks convention).
+  * zero re-training per batch), and appended to a code store through
+  * [[Commit]] (idempotent, replay-safe — the Sinks convention).
   * Codes are IDENTICAL to the batch encode by construction — same
   * normalize, same rotation (OPQ), same encode expression, same trained
   * model from the per-dir cache — which PqIngestSpec pins by exact
@@ -42,10 +41,7 @@ object PqIngest {
       .parquet(srcDir)
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val manifest = Paths.get(storeDir, "_manifest")
-        Files.createDirectories(manifest)
-        val marker = manifest.resolve(id.toString)
-        if (!Files.exists(marker)) {
+        Commit.once(storeDir, id) {
           val vecs = batch.select(col("vec_id"),
             toDouble(col("embedding")).as("v"))
           val codes =
@@ -70,7 +66,6 @@ object PqIngest {
               sum(col("d2ppb")).as("sum_d2_ppb"),
               max(col("d2ppb")).as("max_d2_ppb"))
             .write.mode("overwrite").parquet(s"$storeDir/stats/batch=$id")
-          Files.createFile(marker)
         }
         ()
       }

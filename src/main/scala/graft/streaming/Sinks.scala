@@ -1,48 +1,23 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 
 /** Exactly-once-style sinks for foreachBatch, the pattern the reference
   * approximates with checkpoint + JDBC append (cdc_processor.py:100-124).
   *
   * Structured Streaming guarantees foreachBatch sees each batchId at least
-  * once (replays after failure); writing through a per-batch manifest makes
-  * the sink idempotent, upgrading at-least-once delivery to exactly-once
-  * output. At scale the manifest is one tiny marker per micro-batch on
-  * shared storage — negligible next to the data write.
+  * once (replays after failure); committing each batch through [[Commit]]
+  * makes the sink idempotent, upgrading at-least-once delivery to
+  * exactly-once output. At scale the commit is one tiny marker per
+  * micro-batch on shared storage — negligible next to the data write.
   */
 object Sinks {
 
-  /** Write each micro-batch to `dir/batch=<id>`, skipping batch ids already
-    * recorded in the manifest (replay-safe).
+  /** Write each micro-batch to `dir/batch=<id>`, skipping committed batch
+    * ids (replay-safe).
     */
-  def idempotentParquet(dir: String)(batch: DataFrame, batchId: Long): Unit = {
-    val manifest = Paths.get(dir, "_manifest")
-    Files.createDirectories(manifest)
-    val marker = manifest.resolve(batchId.toString)
-    if (!Files.exists(marker)) {
+  def idempotentParquet(dir: String)(batch: DataFrame, batchId: Long): Unit =
+    Commit.once(dir, batchId) {
       batch.write.mode("overwrite").parquet(s"$dir/batch=$batchId")
-      Files.createFile(marker)
     }
-  }
-
-  /** Per-microbatch observability: records (batchId, rows, op-mix) through
-    * the same foreachBatch seam — the reference's print-per-batch logging
-    * (cdc_processor.py:102) done as data.
-    */
-  class RateMonitor {
-    import scala.collection.concurrent.TrieMap
-    val batches = new TrieMap[Long, (Long, Map[String, Long])]()
-
-    def record(opCol: String)(batch: DataFrame, batchId: Long): Unit = {
-      val counts = batch.groupBy(opCol).count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      batches.put(batchId, (counts.values.sum, counts))
-    }
-
-    def totalRows: Long = batches.values.map(_._1).sum
-    def opTotals: Map[String, Long] =
-      batches.values.flatMap(_._2).groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
-  }
 }

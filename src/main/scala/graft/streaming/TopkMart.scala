@@ -32,18 +32,19 @@ import graft.cdc.Envelope
   * batches pay the repair — the property that makes the view maintainable
   * rather than recomputed.
   *
-  * Exactly-once: the same version-dir + marker + pointer protocol, chained
-  * AFTER IncrementalMart's commit (a crash between the two replays the
-  * batch: the mart merge no-ops and the top-k recomputes from the SAME
-  * committed mart version). Ref: daily_report.py's ranked reports — this
-  * keeps them perpetually fresh instead of nightly-recomputed.
+  * Exactly-once: one `v=<batchId>` version per batch committed through
+  * [[Commit]], chained AFTER IncrementalMart's commit (a crash between the
+  * two replays the batch: the mart merge no-ops and the top-k recomputes
+  * from the SAME committed mart version). Ref: daily_report.py's ranked
+  * reports — this keeps them perpetually fresh instead of
+  * nightly-recomputed.
   */
 object TopkMart {
 
   val DefaultK = 10
 
   def readTopk(s: SparkSession, dir: String): Option[DataFrame] =
-    IncrementalSnapshot.latestVersion(dir).map(v => s.read.parquet(s"$dir/v=$v"))
+    Commit.readLatest(s, dir)
 
   private def topkOf(df: DataFrame, k: Int): DataFrame =
     // deterministic total order: value desc, group asc tie-break
@@ -74,55 +75,47 @@ object TopkMart {
         "fixed at store creation (changing it means rebuilding the view)")
     IncrementalMart.merge(snapDir, martDir, keyCols, payloadCols, groupCol,
       valueCol)(batch, batchId)
-    val manifest = Paths.get(topkDir, "_manifest")
-    Files.createDirectories(manifest)
-    val marker = manifest.resolve(batchId.toString)
-    if (Files.exists(marker)) {
-      if (!IncrementalSnapshot.pointerVersion(topkDir).exists(_ >= batchId))
-        IncrementalSnapshot.flipLatest(topkDir, batchId)
-      return false
-    }
-    val s = batch.sparkSession
-    // the mart version this batch just committed, normalized to (g, n, total)
-    val mart = s.read.parquet(s"$martDir/v=$batchId")
-      .select(col(groupCol).as("g"), col("n"), col("total"))
-    // touched groups: the groups of the batch's keys in EITHER adjacent
-    // snapshot version (an update can MOVE a key between groups — both the
-    // donor and the recipient group changed)
-    val touchedKeys = batch.select(keyCols.map(col): _*).distinct()
-    def groupsIn(version: Option[Long]): Option[DataFrame] = version.map { v =>
-      s.read.parquet(s"$snapDir/v=$v")
-        .join(touchedKeys, keyCols, "left_semi")
-        .select(col(groupCol).as("g"))
-    }
-    val tg = (groupsIn(Some(batchId)) ++
-      groupsIn(IncrementalSnapshot.versionBefore(snapDir, batchId)))
-      .reduce(_ unionByName _).distinct()
-    val prevTop = IncrementalSnapshot.versionBefore(topkDir, batchId)
-      .map(v => s.read.parquet(s"$topkDir/v=$v"))
-    val rescan = prevTop match {
-      case None => true // first batch: nothing stored, scan the mart once
-      case Some(top) =>
-        // decreased = a touched group whose new value fell below its OLD
-        // value when it was a stored member, or a member that vanished —
-        // only then can an untouched group deserve promotion
-        top.join(tg, Seq("g"), "left_semi")
-          .select(col("g"), col("total").as("old_total"))
-          .join(mart.select(col("g"), col("total").as("new_total")),
-            Seq("g"), "left_outer")
-          .filter(col("new_total").isNull || col("new_total") < col("old_total"))
-          .limit(1).count() > 0
-    }
-    val next = if (rescan) topkOf(mart, k) else {
-      val top = prevTop.get
-      val kept = top.join(tg, Seq("g"), "left_anti")
-      val fresh = mart.join(tg, Seq("g"), "left_semi")
-      topkOf(kept.unionByName(fresh), k)
-    }
-    next.write.mode("overwrite").parquet(s"$topkDir/v=$batchId")
-    Files.createFile(marker)
-    IncrementalSnapshot.flipLatest(topkDir, batchId)
-    rescan
+    Commit.once(topkDir, batchId) {
+      val s = batch.sparkSession
+      // the mart version this batch just committed, normalized to (g, n, total)
+      val mart = s.read.parquet(s"$martDir/v=$batchId")
+        .select(col(groupCol).as("g"), col("n"), col("total"))
+      // touched groups: the groups of the batch's keys in EITHER adjacent
+      // snapshot version (an update can MOVE a key between groups — both the
+      // donor and the recipient group changed)
+      val touchedKeys = batch.select(keyCols.map(col): _*).distinct()
+      def groupsIn(version: Option[Long]): Option[DataFrame] = version.map { v =>
+        s.read.parquet(s"$snapDir/v=$v")
+          .join(touchedKeys, keyCols, "left_semi")
+          .select(col(groupCol).as("g"))
+      }
+      val tg = (groupsIn(Some(batchId)) ++
+        groupsIn(Commit.before(snapDir, batchId)))
+        .reduce(_ unionByName _).distinct()
+      val prevTop = Commit.before(topkDir, batchId)
+        .map(v => s.read.parquet(s"$topkDir/v=$v"))
+      val rescan = prevTop match {
+        case None => true // first batch: nothing stored, scan the mart once
+        case Some(top) =>
+          // decreased = a touched group whose new value fell below its OLD
+          // value when it was a stored member, or a member that vanished —
+          // only then can an untouched group deserve promotion
+          top.join(tg, Seq("g"), "left_semi")
+            .select(col("g"), col("total").as("old_total"))
+            .join(mart.select(col("g"), col("total").as("new_total")),
+              Seq("g"), "left_outer")
+            .filter(col("new_total").isNull || col("new_total") < col("old_total"))
+            .limit(1).count() > 0
+      }
+      val next = if (rescan) topkOf(mart, k) else {
+        val top = prevTop.get
+        val kept = top.join(tg, Seq("g"), "left_anti")
+        val fresh = mart.join(tg, Seq("g"), "left_semi")
+        topkOf(kept.unionByName(fresh), k)
+      }
+      next.write.mode("overwrite").parquet(s"$topkDir/v=$batchId")
+      rescan
+    }.getOrElse(false)
   }
 
   /** Stream a CDC source into a maintained (snapshot, mart, top-k) stack. */

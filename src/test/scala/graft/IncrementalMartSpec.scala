@@ -81,7 +81,7 @@ class IncrementalMartSpec extends AnyFunSuite {
     assert(IncrementalSnapshot.latestVersion(martDir) === Some(0L))
 
     // the replayed foreachBatch no-ops the snapshot merge and still folds
-    // the batch-1 delta against the PRE-batch version (not the moved pointer)
+    // the batch-1 delta against the PRE-batch version (not the snapshot's latest)
     IncrementalMart.merge(snapDir, martDir, Seq("id"), payloadCols, "status", "price")(b1, 1L)
     assert(IncrementalSnapshot.latestVersion(martDir) === Some(1L))
     assertMartMatches(snapDir, martDir)

@@ -46,31 +46,35 @@ class IncrementalSnapshotSpec extends AnyFunSuite {
     val again = IncrementalSnapshot.readSnapshot(spark, s"$tmp/snap").get
     assert(again.count() === expected.count())
   }
-  test("merge repairs a stale pointer after a crash between marker and flip") {
+  test("a crash after the marker: readers see version N, replay is a no-op, N+1 merges on top") {
     val tmp = Files.createTempDirectory("graft_crash").toString
     val dir = s"$tmp/snap"
-    val ch = CdcSim.parsedChangelog(spark, sf).limit(200).localCheckpoint()
+    val ch = CdcSim.parsedChangelog(spark, sf).localCheckpoint()
+    def slice(m: Int) = ch.filter(col("id") % 3 === m).limit(150).localCheckpoint()
+    def merge(m: Int, id: Long): Unit =
+      IncrementalSnapshot.merge(dir, Seq("id"), CdcQueries.payloadCols)(slice(m), id)
+    def keys(): Set[Long] =
+      IncrementalSnapshot.readSnapshot(spark, dir).get
+        .select(col("id").cast("long")).collect().map(_.getLong(0)).toSet
 
-    // batch 0 commits normally
-    IncrementalSnapshot.merge(dir, Seq("id"), CdcQueries.payloadCols)(ch, 0L)
-    assert(IncrementalSnapshot.latestVersion(dir) === Some(0L))
-
-    // simulate the crash window of batch 1: version dir + marker written,
-    // but the process died before flipping _LATEST
-    val v1 = IncrementalSnapshot.readSnapshot(spark, dir).get
-    v1.write.mode("overwrite").parquet(s"$dir/v=1")
-    Files.createFile(Paths.get(dir, "_manifest", "1"))
-    Files.writeString(Paths.get(dir, "_LATEST"), "0")
-
-    // replay of batch 1 must NOT remerge (marker present) and must repair
-    // the pointer so batch 2 reads the committed version
-    IncrementalSnapshot.merge(dir, Seq("id"), CdcQueries.payloadCols)(ch, 1L)
+    merge(0, 0L)
+    // batch 1 commits (version dir, then marker) and the process dies before
+    // the stream checkpoint records it, so the stream redelivers batch 1
+    merge(1, 1L)
+    val v1 = keys()
     assert(IncrementalSnapshot.latestVersion(dir) === Some(1L))
 
-    // and the stream keeps going: batch 2 merges on top of the repaired state
-    IncrementalSnapshot.merge(dir, Seq("id"), CdcQueries.payloadCols)(ch, 2L)
+    // the redelivery (here with different rows) must not remerge
+    merge(2, 1L)
+    assert(IncrementalSnapshot.latestVersion(dir) === Some(1L))
+    assert(keys() === v1)
+
+    // and the stream keeps going: batch 2 merges on top of version 1
+    merge(2, 2L)
     assert(IncrementalSnapshot.latestVersion(dir) === Some(2L))
-    assert(IncrementalSnapshot.readSnapshot(spark, dir).get.count() > 0)
+    val v2 = keys()
+    assert(v2.filter(_ % 3 != 2) === v1)
+    assert(v2.exists(_ % 3 == 2))
   }
   test("time travel reads every committed version; vacuum retains the newest") {
     val tmp = Files.createTempDirectory("graft_tt").toString
@@ -100,7 +104,7 @@ class IncrementalSnapshotSpec extends AnyFunSuite {
     assert(asOf(99L) === Some(seen(2L)))
 
     // vacuum to the newest 2: version 0 is gone from index, travel, and disk;
-    // the latest read and the pointer are untouched
+    // the latest read is untouched
     assert(IncrementalSnapshot.vacuum(dir, keep = 2) === Seq(0L))
     assert(IncrementalSnapshot.versions(dir) === Seq(1L, 2L))
     assert(asOf(0L) === None)
@@ -111,33 +115,35 @@ class IncrementalSnapshotSpec extends AnyFunSuite {
     // a replayed pre-vacuum batch id must not resurrect: marker gone, but
     // merge of batch 0 again would be a NEW merge on current state — the
     // stream's checkpoint prevents that in practice; here we only assert
-    // vacuum never drops the pointer target even when keep is minimal
+    // vacuum never drops the latest version even when keep is minimal
     assert(IncrementalSnapshot.vacuum(dir, keep = 1) === Seq(1L))
     assert(state() === seen(2L))
   }
-  test("a lost _LATEST pointer recovers from the manifest, not as empty state") {
-    val tmp = Files.createTempDirectory("graft_lostptr").toString
+  test("a crash before the marker leaves an orphan that is never read and loses no keys") {
+    val tmp = Files.createTempDirectory("graft_orphan").toString
     val dir = s"$tmp/snap"
     val ch = CdcSim.parsedChangelog(spark, sf).limit(200).localCheckpoint()
+    def keys(): Set[Long] =
+      IncrementalSnapshot.readSnapshot(spark, dir).get
+        .select(col("id").cast("long")).collect().map(_.getLong(0)).toSet
 
     IncrementalSnapshot.merge(dir, Seq("id"), CdcQueries.payloadCols)(ch, 0L)
     IncrementalSnapshot.merge(dir, Seq("id"), CdcQueries.payloadCols)(ch, 1L)
-    val before = IncrementalSnapshot.readSnapshot(spark, dir).get.count()
-    assert(before > 0)
+    val before = keys()
+    assert(before.size > 1)
 
-    // the pointer vanishes (copied dir / non-atomic writer / fs quirk)
-    Files.delete(Paths.get(dir, "_LATEST"))
+    // batch 2 died mid-write: a partial v=2 without its marker
+    IncrementalSnapshot.readSnapshot(spark, dir).get.limit(1).localCheckpoint()
+      .write.mode("overwrite").parquet(s"$dir/v=2")
     assert(IncrementalSnapshot.latestVersion(dir) === Some(1L))
-    assert(IncrementalSnapshot.readSnapshot(spark, dir).get.count() === before)
+    assert(IncrementalSnapshot.versions(dir) === Seq(0L, 1L))
+    assert(keys() === before)
+    assert(IncrementalSnapshot.readSnapshotAsOf(spark, dir, 2L).get.count() === before.size)
 
-    // and a corrupt pointer behaves the same way
-    Files.writeString(Paths.get(dir, "_LATEST"), "garbage")
-    assert(IncrementalSnapshot.latestVersion(dir) === Some(1L))
-
-    // the next NEW batch merges against the recovered state — no key loss
-    Files.delete(Paths.get(dir, "_LATEST"))
+    // the replay merges against committed version 1, not the orphan, and
+    // overwrites it
     IncrementalSnapshot.merge(dir, Seq("id"), CdcQueries.payloadCols)(ch, 2L)
     assert(IncrementalSnapshot.latestVersion(dir) === Some(2L))
-    assert(IncrementalSnapshot.readSnapshot(spark, dir).get.count() === before)
+    assert(keys() === before)
   }
 }
