@@ -46,7 +46,7 @@ class IncrementalSnapshotSpec extends AnyFunSuite {
     val again = IncrementalSnapshot.readSnapshot(spark, s"$tmp/snap").get
     assert(again.count() === expected.count())
   }
-  test("a crash after the marker: readers see version N, replay is a no-op, N+1 merges on top") {
+  test("a crash after the marker: replay is a no-op, N+1 merges on top") {
     val tmp = Files.createTempDirectory("graft_crash").toString
     val dir = s"$tmp/snap"
     val ch = CdcSim.parsedChangelog(spark, sf).localCheckpoint()
@@ -119,7 +119,7 @@ class IncrementalSnapshotSpec extends AnyFunSuite {
     assert(IncrementalSnapshot.vacuum(dir, keep = 1) === Seq(1L))
     assert(state() === seen(2L))
   }
-  test("a crash before the marker leaves an orphan that is never read and loses no keys") {
+  test("a crash before the marker leaves an unread orphan, no keys lost") {
     val tmp = Files.createTempDirectory("graft_orphan").toString
     val dir = s"$tmp/snap"
     val ch = CdcSim.parsedChangelog(spark, sf).limit(200).localCheckpoint()
