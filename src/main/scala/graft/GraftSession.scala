@@ -47,10 +47,6 @@ object GraftSession {
       .config("spark.ui.retainedStages", "200")
       .config("spark.ui.retainedTasks", "2000")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      // A/B knob for Scale.materialize's storage level (serialized blocks
-      // vs the localCheckpoint default) — see Scale.materialize
-      .config("spark.graft.serMaterialize",
-        sys.env.getOrElse("SPARK_GRAFT_SER_MAT", "false"))
 
   def get(): SparkSession = {
     val spark = builder().getOrCreate()

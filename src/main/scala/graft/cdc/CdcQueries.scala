@@ -128,16 +128,16 @@ object CdcQueries {
     * (per-bucket version dirs + global marker); the READ is the point —
     * parquet dirs resolved per bucket, no log scan: the Delta/Iceberg
     * `VERSION AS OF` role, oracle-checked against the equivalent
-    * log-prefix snapshot. Store-fold ≡ log-snapshot algebra and
-    * bucketed ≡ monolithic parity are separately pinned in
-    * IncrementalSnapshotSpec / CdcPropertySpec / BucketedSnapshotSpec.
+    * log-prefix snapshot. The store-fold ≡ log-snapshot algebra is
+    * separately pinned in CdcPropertySpec and, per batch on the store
+    * itself, in BucketedSnapshotSpec.
     *
     * The store here is the BUCKETED one — the store you'd deploy at
     * 100 TB (per-batch write cost = touched buckets, not history). Note
     * this bench feed is the bucketed store's documented worst case: the
     * batches are TIME slices and the orders keys are uniform over the id
     * space, so every batch touches every bucket and the build degenerates
-    * by construction to the monolithic full rewrite (never worse). A real
+    * by construction to a full-snapshot rewrite (never worse). A real
     * CDC feed whose recent keys cluster pays per-batch work proportional
     * to the batch — that case is what BucketedSnapshotSpec pins.
     */

@@ -704,7 +704,7 @@ object Dedup {
     *
     * The keyed frame is MATERIALIZED before the self-join: both join sides
     * read it, and without the checkpoint each side recomputes the whole
-    * upstream fingerprint scan — the dominant stage (PhashAttrib r15,
+    * upstream fingerprint scan — the dominant stage (r15 stage timing,
     * isolated sf10: fingerprints 35.9 s vs 4.9 s band join), so the
     * double-scan alone cost more than every downstream stage combined
     * (mm_phash_neardup isolated sf10 136.1 → 45.0 s with the checkpoint,
@@ -903,8 +903,8 @@ object Dedup {
   /** Exact pairwise cosine as a mapPartitions primitive-loop kernel over the
     * broadcast corpus — the "(d) last resort" of the custom-operator ladder,
     * and the right one here: dense BLAS-like math is ~50× faster in tight
-    * double loops than per-pair Catalyst expression eval (measured via
-    * graft.tools.MicroBench). Float semantics match the DuckDB oracle
+    * double loops than per-pair Catalyst expression eval (measured in a
+    * JVM microbenchmark). Float semantics match the DuckDB oracle
     * exactly: sequential dot/norm folds, cos = dot/sqrt(n2a*n2b), floor
     * rounding.
     *

@@ -42,9 +42,8 @@ object Graph {
   val PrIters = 5
   val PrTopK = 100
 
-  /** PageRank's settled pre-loop state — split from the loop so the sf10
-    * attribution probe (tools/GraphAttrib) can time edge build vs
-    * supersteps on the exact production frames.
+  /** PageRank's settled pre-loop state — split from the loop so edge build
+    * and supersteps can be timed apart on the exact production frames.
     */
   private[graft] case class PrState(nodes: DataFrame, nn: DataFrame, adj: DataFrame)
 

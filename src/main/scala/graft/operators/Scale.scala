@@ -315,15 +315,6 @@ object Scale {
     val conf = df.sparkSession.conf
     if (conf.getOption("spark.graft.durableMaterialize")
         .exists(_.toBoolean)) Dedup.durable(df)
-    // serialized blocks (Kryo + optional compression) instead of the
-    // localCheckpoint default's deserialized rows: ~3-5× smaller pinned
-    // footprint for long/double frames, bought back as decode CPU on every
-    // downstream read. Off by default — measured at sf10 on the two
-    // spill-bound floors (part_cosim, dedup_jaccard_ppjoin) before deciding;
-    // flip with SPARK_GRAFT_SER_MAT=true (GraftSession wires the env).
-    else if (conf.getOption("spark.graft.serMaterialize").exists(_.toBoolean))
-      df.localCheckpoint(eager = true,
-        storageLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     else df.localCheckpoint()
   }
 

@@ -283,13 +283,13 @@ object Similarity {
     * recall ≈ 0.92 here at ≈ 60% corpus scanned; on a genuinely clustered
     * near-dup corpus the same structure scans a small fraction. The
     * recall/scan tradeoff across (SigBits, NumTables) is tabulated in
-    * SURVEY §4 (generated by graft.tools.LshTune).
+    * SURVEY §4.
     */
   val NumTables = 8
 
   /** Seeded hyperplane family — same LCG stream for any (tables, bits)
     * shape, so the default config's planes are stable across refactors and
-    * LshTune can sweep other shapes from the identical generator.
+    * a sweep over other shapes draws from the identical generator.
     */
   def mkPlanes(numTables: Int, sigBits: Int): IndexedSeq[IndexedSeq[IndexedSeq[Double]]] = {
     var x = 424242424242L
@@ -1156,8 +1156,8 @@ object Similarity {
     * generated oracle, so build parity holds by construction wherever the
     * cap binds). 8·GraphK = 40 does NOT bind on this corpus at any tested
     * SF — measured max symmetrized degree 17/18/21 at sf0.001/0.01/0.1
-    * (tools/DegCheck) — so results at the gate SFs are unchanged
-    * (spec-pinned); it exists to bound the deployment-SF worst case.
+    * — so results at the gate SFs are unchanged (SimilaritySpec pins the
+    * cap as non-binding); it exists to bound the deployment-SF worst case.
     */
   val GraphRevCap = 8 * GraphK
 
@@ -1919,25 +1919,6 @@ object Similarity {
         greatest(col("q_id"), col("vec_id")).as("vec_b"),
         detRound(col("cos"), 6).as("cos"))
       .distinct()
-  }
-
-  /** Stage-by-stage diagnostic frames for the ANN dedup route (Scratch). */
-  private[graft] def annDedupDiag(s: SparkSession, d: String): Seq[(String, DataFrame)] = {
-    val cc = centColsFor(s, d)
-    val assigned = cc.cleanup(cc.attach(corpus(s, d))
-        .withColumn("cell", NativeVector.argmaxDot(col("v"), cc.flat, cc.sn)))
-      .withColumn("n2", NativeVector.norm2(col("v")))
-    val probes = cc.cleanup(cc.attach(corpus(s, d))
-        .withColumn("cell",
-          explode(NativeVector.argTopKDot(col("v"), cc.flat, cc.sn, lit(AnnDedupProbes)))))
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("cell"))
-      .withColumn("qn2", NativeVector.norm2(col("qv")))
-    val joined = probes.join(assigned, "cell").filter(col("q_id") =!= col("vec_id"))
-    val scored = joined.withColumn("cos",
-        NativeVector.dot(col("qv"), col("v")) / sqrt(col("qn2") * col("n2")))
-      .filter(col("cos") >= SemTau)
-    Seq("assigned" -> assigned, "probes" -> probes, "joined" -> joined,
-      "scored" -> scored, "full" -> dedupEmbeddingAnn(s, d))
   }
 
   /** Blocking-quality audit for the ANN dedup route (the dedup_recall_eval

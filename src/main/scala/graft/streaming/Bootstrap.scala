@@ -14,10 +14,11 @@ import graft.cdc.Envelope
   * At 100 TB the phases want DIFFERENT execution models: trickling a full
   * table copy through micro-batches would hold the stream at the snapshot
   * for hours, so the snapshot phase runs as ONE batch job (`seed`) and only
-  * the tail streams (`startTail`). Both phases land in the same versioned
-  * store through the same [[Commit]] marker protocol — the seed is
-  * batch `SeedVersion = -1`, strictly before every streaming batch id — so
-  * each phase is replay-safe alone and the pair is replay-safe together.
+  * the tail streams (`startTail`). Both phases land in the same
+  * [[BucketedSnapshot]] store through the same [[Commit]] marker protocol
+  * — the seed is batch `SeedVersion = -1`, strictly before every streaming
+  * batch id — so each phase is replay-safe alone and the pair is
+  * replay-safe together.
   *
   * The at-least-once seam: the tail may REDELIVER changes from before the
   * snapshot cut. For live keys the per-key ts_ms max_by absorbs that; for
@@ -45,18 +46,19 @@ object Bootstrap {
       payloadSchema: StructType, keyCols: Seq[String], dir: String,
       tombstoneRetention: Long): Unit = {
     val payloadCols = payloadSchema.fieldNames.toSeq.filterNot(keyCols.contains)
-    IncrementalSnapshot.merge(dir, keyCols, payloadCols,
-      Some(tombstoneRetention))(
+    BucketedSnapshot.merge(dir, keyCols, payloadCols,
+      tombstoneRetention = Some(tombstoneRetention))(
       Envelope.parse(snapshotEnvelopes, payloadSchema), SeedVersion)
   }
 
-  /** Stream the change tail into the seeded store — IncrementalSnapshot's
+  /** Stream the change tail into the seeded store — BucketedSnapshot's
     * standard pipeline in the same tombstone-retention mode as the seed.
     */
   def startTail(s: SparkSession, src: CdcPipeline.Source,
       payloadSchema: StructType, keyCols: Seq[String], dir: String,
       checkpointDir: String, tombstoneRetention: Long,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    IncrementalSnapshot.start(s, src, payloadSchema, keyCols, dir,
-      checkpointDir, trigger, Some(tombstoneRetention))
+    BucketedSnapshot.start(s, src, payloadSchema, keyCols, dir,
+      checkpointDir, trigger = trigger,
+      tombstoneRetention = Some(tombstoneRetention))
 }

@@ -9,11 +9,15 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import graft.cdc.{CdcOps, Envelope}
 
-/** Hash-bucketed incrementally-maintained current-state table — the
-  * O(touched)-write upgrade of [[IncrementalSnapshot]], which re-reads and
-  * REWRITES the whole snapshot every micro-batch. That full rewrite is the
+/** Incrementally-maintained current-state table: the ClickHouse
+  * `ReplacingMergeTree + FINAL` role (init-clickhouse.sql) as a streaming
+  * merge job. Each micro-batch of change events merges into the on-disk
+  * snapshot: union(stored state, batch) → latest version per key → drop
+  * tombstones → write the new version.
+  *
+  * Re-reading and REWRITING the whole snapshot every micro-batch is the
   * streaming store's real 100 TB wall: a 1 GB/s writer spends 28 hours per
-  * micro-batch on a 100 TB table no matter how small the batch is. Here the
+  * micro-batch on a 100 TB table no matter how small the batch is. So the
   * store is split into a fixed number of hash buckets on the merge key
   * (`pmod(xxhash64(key), buckets)` — the layout Spark's own bucketing and
   * every upsert lake format use), and a batch merges ONLY the buckets its
@@ -21,8 +25,8 @@ import graft.cdc.{CdcOps, Envelope}
   * same, and untouched buckets are not opened at all. A CDC feed whose
   * batches touch a small key range (the common case — recent keys cluster)
   * pays per-batch work proportional to the batch, not to history; the
-  * worst case (keys spraying every bucket) degenerates to exactly the old
-  * full rewrite, never worse.
+  * worst case (keys spraying every bucket) degenerates to exactly a full
+  * rewrite, never worse.
   *
   * Layout: `dir/bucket=<b>/v=<batchId>` holds bucket b's rows as of the
   * batch that last touched it — buckets version INDEPENDENTLY, so "the
@@ -164,8 +168,7 @@ object BucketedSnapshot {
   /** A stored version as the LIVE-ROWS view: retention-mode stores keep
     * delete tombstones as rows (op='d') so redelivered pre-tombstone
     * changes cannot resurrect a deleted key; readers see live rows only.
-    * Plain stores have no `op` column and pass through untouched (the
-    * [[IncrementalSnapshot]] discipline).
+    * Plain stores have no `op` column and pass through untouched.
     */
   private def liveView(df: DataFrame): DataFrame =
     if (df.columns.contains("op")) df.filter(col("op") =!= "d").drop("op")
@@ -175,14 +178,19 @@ object BucketedSnapshot {
   def readSnapshot(s: SparkSession, dir: String): Option[DataFrame] =
     latestVersion(dir).flatMap(v => readSnapshotAsOf(s, dir, v))
 
-  /** VERSION AS OF over the bucketed store: per bucket, the newest
-    * committed version ≤ v — O(#buckets) dir listings, no log replay.
+  /** VERSION AS OF over the bucketed store (batch ids are the version
+    * line): per bucket, the newest committed version ≤ v — O(#buckets) dir
+    * listings, no log replay. Complements `CdcOps.snapshotAsOf`, which
+    * answers the same question at an arbitrary TIMESTAMP from the full
+    * event log; this one answers it from the maintained store, at batch
+    * granularity.
     *
-    * A committed store whose buckets are ALL empty (every key tombstoned)
-    * reads as an empty DataFrame under the persisted `_SCHEMA`, not None —
-    * "store is legitimately empty" and "store does not exist / version
-    * vacuumed away" are different answers and callers need to tell them
-    * apart (the [[IncrementalSnapshot]] contract).
+    * None when nothing ≤ v is committed (pre-history) or v is below the
+    * vacuum horizon. A committed store whose buckets are ALL empty (every
+    * key tombstoned) reads as an empty DataFrame under the persisted
+    * `_SCHEMA`, not None — "store is legitimately empty" and "store does
+    * not exist / version vacuumed away" are different answers and callers
+    * need to tell them apart.
     */
   def readSnapshotAsOf(s: SparkSession, dir: String, v: Long): Option[DataFrame] = {
     if (!Commit.versions(dir).exists(_ <= v)) None
@@ -261,8 +269,8 @@ object BucketedSnapshot {
     if (Files.exists(p)) Files.readString(p).trim.toLongOption else None
   }
 
-  /** Retention over the bucketed store (the monolithic store's `vacuum`
-    * adapted to independent bucket versioning): keep the newest `keep`
+  /** Retention (the ReplacingMergeTree TTL/merge role), adapted to
+    * independent bucket versioning: keep the newest `keep`
     * committed batches readable AS OF, drop everything each bucket no
     * longer needs below that cutoff. A bucket dir older than the cutoff
     * is still REFERENCED if it is the bucket's newest version ≤ cutoff
@@ -302,11 +310,11 @@ object BucketedSnapshot {
   /** Merge each fragmented bucket's CURRENT referenced version into one
     * part file — the small-file maintenance the long-lived store needs
     * (the [[Compaction]] role ported to independently-versioned buckets):
-    * every micro-batch write leaves however many part files the merge
-    * job's parallelism produced, and a bucket touched by thousands of
-    * small batches accumulates a new multi-file version dir per touch;
-    * [[vacuum]] drops the UNREFERENCED old versions but never merges
-    * files within the referenced one.
+    * [[merge]] clusters its writes to one file per bucket, but a version
+    * dir written by an engine without that clustering (or split by
+    * `spark.sql.files.maxRecordsPerFile`) holds as many part files as the
+    * writing job had tasks; [[vacuum]] drops the UNREFERENCED old versions
+    * but never merges files within the referenced one.
     *
     * A bucket is picked when its newest committed version holds more than
     * one part file totalling under `targetBytes` (the same fragmentation
@@ -375,13 +383,15 @@ object BucketedSnapshot {
     * buckets' new version dirs into place.
     *
     * `tombstoneRetention` (version units, e.g. ms) opts into the
-    * ClickHouse-sign-row / Kafka-`delete.retention.ms` store shape, ported
-    * per bucket from [[IncrementalSnapshot.merge]] unchanged: the state
-    * folds through [[CdcOps.logCompact]] instead of
+    * ClickHouse-sign-row / Kafka-`delete.retention.ms` store shape: the
+    * state folds through [[CdcOps.logCompact]] instead of
     * [[CdcOps.snapshotLatest]], so delete tombstones persist AS ROWS until
-    * they age past the retention horizon — an at-least-once redelivery of
-    * a pre-delete change in a later batch cannot resurrect the key (the
-    * Bootstrap seam's guarantee, now available on bucketed stores).
+    * they age past the retention horizon. Without it, a tombstone is
+    * applied and forgotten in one merge — correct under exactly-once
+    * delivery, but an at-least-once redelivery of a pre-delete change in a
+    * LATER batch would resurrect the key (the [[Bootstrap]] seam makes
+    * this real: the snapshot phase compacts away history that the tail may
+    * redeliver). Readers always get the live-rows view.
     * Per-bucket nuance: the compaction head is the max ts over (touched
     * bucket state ∪ batch), so an untouched bucket's aged tombstones
     * survive until its next write — retention can only run LONG, never
@@ -488,14 +498,8 @@ object BucketedSnapshot {
         // file-per-bucket is also exactly the layout [[compact]] converges
         // to). The extra exchange moves only the touched buckets' merged
         // state, the same rows the write emits.
-        // `spark.graft.clusterStoreWrites=false` is the spec seam that
-        // restores task-parallel (fragmented) version dirs — [[compact]]
-        // must handle stores written by engines without this clustering.
-        val clustered =
-          if (s.conf.getOption("spark.graft.clusterStoreWrites")
-              .forall(_.toBoolean)) next.repartition(nb, col("bucket"))
-          else next
-        clustered.write.mode("overwrite").partitionBy("bucket")
+        next.repartition(nb, col("bucket"))
+          .write.mode("overwrite").partitionBy("bucket")
           .parquet(stage.toString)
         touched.foreach { b =>
           val src = stage.resolve(s"bucket=$b")

@@ -70,7 +70,7 @@ object CdcStream {
     // enough that the fold stays parallel. The pin spans awaitTermination:
     // batch 0 is planned on the stream thread, possibly after start()
     // returns.
-    StreamQueries.withShufflePartitions(s, StreamQueries.statePartitionsFor(s,
+    StreamQueries.withShufflePartitions(s, StreamQueries.statePartitionsFor(
         StreamQueries.pathBytes(java.nio.file.Paths.get(tmp, "in")),
         bytesPerPartition = 4L << 20)) {
       parseStream(lines)

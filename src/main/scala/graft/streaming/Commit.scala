@@ -55,12 +55,6 @@ object Commit {
   def before(dir: String, id: Long): Option[Long] =
     versions(dir).filter(_ < id).lastOption
 
-  /** Uncommit batch `id` (retention): its output becomes an orphan that
-    * readers already ignore, so the caller may delete it afterwards.
-    */
-  def forget(dir: String, id: Long): Unit =
-    Files.deleteIfExists(manifest(dir).resolve(id.toString))
-
   /** The newest committed `dir/v=<id>` version, for stores that write one
     * full version dir per batch.
     */

@@ -4,12 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
-import graft.cdc.Envelope
+import graft.cdc.{CdcOps, Envelope}
 
 /** Incrementally maintained inner JOIN of two CDC-fed current-state
   * tables — the materialized-view delta rule, not a per-batch full
   * recompute. Each micro-batch first merges both sides' changes into
-  * their [[IncrementalSnapshot]] stores, then repairs the join store on
+  * their [[BucketedSnapshot]] stores, then repairs the join store on
   * TOUCHED KEYS only:
   *
   *   J' = J − {rows whose left id ∈ ΔA keys  OR  right id ∈ ΔB keys}
@@ -38,14 +38,17 @@ object IncrementalJoin {
       aPayload: Seq[String], bPayload: Seq[String], joinACol: String)(
       aBatch: DataFrame, bBatch: DataFrame, batchId: Long): Unit = {
     val s = aBatch.sparkSession
-    IncrementalSnapshot.merge(aDir, Seq("id"), aPayload)(aBatch, batchId)
-    IncrementalSnapshot.merge(bDir, Seq("id"), bPayload)(bBatch, batchId)
+    BucketedSnapshot.merge(aDir, Seq("id"), aPayload)(aBatch, batchId)
+    BucketedSnapshot.merge(bDir, Seq("id"), bPayload)(bBatch, batchId)
+    // a side that has never stored a row (only empty batches so far) has no
+    // snapshot yet: it joins as an empty one of the same shape
+    def side(dir: String, batch: DataFrame, payload: Seq[String]): DataFrame =
+      BucketedSnapshot.readSnapshot(s, dir).getOrElse(
+        CdcOps.snapshotLatest(batch.limit(0), Seq("id"), "ts_ms", payload))
 
     Commit.once(jDir, batchId) {
-      val sa = IncrementalSnapshot.readSnapshot(s, aDir)
-        .getOrElse(throw new IllegalStateException(s"no snapshot at $aDir"))
-      val sb0 = IncrementalSnapshot.readSnapshot(s, bDir)
-        .getOrElse(throw new IllegalStateException(s"no snapshot at $bDir"))
+      val sa = side(aDir, aBatch, aPayload)
+      val sb0 = side(bDir, bBatch, bPayload)
       val sb = sb0.toDF(sb0.columns.map("b_" + _): _*)
       val ka = aBatch.select(col("id")).distinct()
       val kb = bBatch.select(col("id").as("b_id")).distinct()
@@ -71,7 +74,7 @@ object IncrementalJoin {
   }
 
   def readJoin(s: SparkSession, jDir: String): Option[DataFrame] =
-    IncrementalSnapshot.readSnapshot(s, jDir)
+    Commit.readLatest(s, jDir)
 
   /** Stream a multiplexed two-topic feed (envelope text files under
     * `dir/a` and `dir/b`) into a maintained join: one stream, one

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.StructType
 import graft.cdc.Envelope
 
 /** Incrementally-maintained aggregate mart over the CDC stream — the
-  * ClickHouse `AggregatingMergeTree` role next to IncrementalSnapshot's
+  * ClickHouse `AggregatingMergeTree` role next to [[BucketedSnapshot]]'s
   * `ReplacingMergeTree`: `mart ≡ SELECT group, count(*), sum(value) FROM
   * current-snapshot GROUP BY group` after every micro-batch, maintained by
   * DELTAS, never by re-aggregating the snapshot.
@@ -31,8 +31,9 @@ import graft.cdc.Envelope
   * Exactly-once: one `v=<batchId>` mart version per batch, committed
   * through [[Commit]] AFTER the snapshot's own commit — a crash between
   * the two replays the batch, whose snapshot merge no-ops and whose mart
-  * delta re-reads the SAME two immutable version dirs (`Commit.before`,
-  * not the snapshot's latest), landing the identical mart.
+  * delta re-reads the SAME two committed snapshot versions
+  * (`Commit.before`, not the snapshot's latest), landing the identical
+  * mart.
   * Ref: init-clickhouse.sql (the mart tables), daily_report.py (the
   * report this keeps perpetually fresh).
   */
@@ -47,20 +48,20 @@ object IncrementalMart {
   def merge(snapDir: String, martDir: String, keyCols: Seq[String],
       payloadCols: Seq[String], groupCol: String, valueCol: String)
       (batch: DataFrame, batchId: Long): Unit = {
-    IncrementalSnapshot.merge(snapDir, keyCols, payloadCols)(batch, batchId)
+    BucketedSnapshot.merge(snapDir, keyCols, payloadCols)(batch, batchId)
     Commit.once(martDir, batchId) {
       val s = batch.sparkSession
       val touched = batch.select(keyCols.map(col): _*).distinct()
-      def contrib(version: Option[Long], sign: Int): Option[DataFrame] =
-        version.map { v =>
-          s.read.parquet(s"$snapDir/v=$v")
-            .join(touched, keyCols, "left_semi")
-            .select(col(groupCol), lit(sign).as("sign"),
-              col(valueCol).cast("decimal(18,4)").as("val"))
-        }
-      val plus = contrib(Some(batchId), 1).get
-      val minus = contrib(Commit.before(snapDir, batchId), -1)
-      val delta = minus.map(plus.unionByName(_)).getOrElse(plus)
+      // an absent snapshot version (pre-history, or a store that has never
+      // held a row) contributes nothing: it reads as the batch's empty shape
+      def contrib(version: Option[Long], sign: Int): DataFrame =
+        version.flatMap(BucketedSnapshot.readSnapshotAsOf(s, snapDir, _))
+          .getOrElse(batch.limit(0))
+          .join(touched, keyCols, "left_semi")
+          .select(col(groupCol), lit(sign).as("sign"),
+            col(valueCol).cast("decimal(18,4)").as("val"))
+      val delta = contrib(Some(batchId), 1)
+        .unionByName(contrib(Commit.before(snapDir, batchId), -1))
         .groupBy(col(groupCol))
         .agg(sum(col("sign")).cast("long").as("n"),
           sum(col("sign") * col("val")).cast("decimal(18,4)").as("total"))

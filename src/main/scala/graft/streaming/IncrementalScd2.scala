@@ -8,7 +8,7 @@ import graft.cdc.{CdcOps, Envelope}
 
 /** Incrementally maintained SCD2 history: the dimension-history table
   * (valid_from / valid_to / is_current intervals per key version) kept up
-  * to date per micro-batch — the history twin of [[IncrementalSnapshot]]'s
+  * to date per micro-batch — the history twin of [[BucketedSnapshot]]'s
   * current-state table, and the on-disk source a warehouse would serve
   * `cdc_scd2_dim_join`-style temporal joins from.
   *
@@ -23,7 +23,7 @@ import graft.cdc.{CdcOps, Envelope}
   * O(batch + touched keys), never O(history).
   *
   * Each batch writes a full `v=<batchId>` history version and commits it
-  * through [[Commit]], like [[IncrementalSnapshot]].
+  * through [[Commit]], like [[IncrementalMart]].
   */
 object IncrementalScd2 {
 

@@ -22,14 +22,11 @@ object StreamQueries {
     * 32 cores vs ~2.5 s on 8). This applies AQE's own sizing rule (advisory
     * ~64 MB per partition) to the streaming state: more data → more state
     * partitions, independent of executor count — the production direction.
-    * `spark.graft.streamStateBytesPerPartition` overrides the divisor.
     */
-  private[streaming] def statePartitionsFor(s: SparkSession,
-      inputBytes: Long, bytesPerPartition: Long = 64L << 20): Int = {
-    val per = s.conf.getOption("spark.graft.streamStateBytesPerPartition")
-      .map(_.toLong).getOrElse(bytesPerPartition)
-    math.min(math.max(1L, (inputBytes + per - 1) / per), 1L << 20).toInt
-  }
+  private[streaming] def statePartitionsFor(inputBytes: Long,
+      bytesPerPartition: Long = 64L << 20): Int =
+    math.min(math.max(1L,
+      (inputBytes + bytesPerPartition - 1) / bytesPerPartition), 1L << 20).toInt
 
   /** Recursive on-disk byte size of a file or directory (local paths — the
     * file-stream sources here are always local staging dirs).
@@ -85,7 +82,7 @@ object StreamQueries {
     // and per-partition store maintenance was the micro-batch wall. The pin
     // spans awaitTermination: the stream thread reads the conf when it
     // plans batch 0, which can be after start() returns.
-    withShufflePartitions(s, statePartitionsFor(s,
+    withShufflePartitions(s, statePartitionsFor(
         pathBytes(java.nio.file.Paths.get(srcFile).toAbsolutePath))) {
       build(s.readStream.schema(schema).parquet(inDir.toString))
         .writeStream.format("memory").queryName(sinkName)

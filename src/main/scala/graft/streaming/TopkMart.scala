@@ -84,14 +84,14 @@ object TopkMart {
       // snapshot version (an update can MOVE a key between groups — both the
       // donor and the recipient group changed)
       val touchedKeys = batch.select(keyCols.map(col): _*).distinct()
-      def groupsIn(version: Option[Long]): Option[DataFrame] = version.map { v =>
-        s.read.parquet(s"$snapDir/v=$v")
+      // (an absent snapshot version holds no groups, as in IncrementalMart)
+      def groupsIn(version: Option[Long]): DataFrame =
+        version.flatMap(BucketedSnapshot.readSnapshotAsOf(s, snapDir, _))
+          .getOrElse(batch.limit(0))
           .join(touchedKeys, keyCols, "left_semi")
           .select(col(groupCol).as("g"))
-      }
-      val tg = (groupsIn(Some(batchId)) ++
-        groupsIn(Commit.before(snapDir, batchId)))
-        .reduce(_ unionByName _).distinct()
+      val tg = groupsIn(Some(batchId))
+        .unionByName(groupsIn(Commit.before(snapDir, batchId))).distinct()
       val prevTop = Commit.before(topkDir, batchId)
         .map(v => s.read.parquet(s"$topkDir/v=$v"))
       val rescan = prevTop match {

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.cdc.{CdcOps, CdcQueries, CdcSim}
-import graft.streaming.{Bootstrap, CdcPipeline, IncrementalSnapshot}
+import graft.streaming.{Bootstrap, BucketedSnapshot, CdcPipeline, Commit}
 
 /** Two-phase Debezium bootstrap: bulk-seed the compacted-topic view (live
   * op='r' rows + retained op='d' tombstones), then stream the change tail.
@@ -43,7 +43,7 @@ class BootstrapSpec extends AnyFunSuite {
     assert(seedEnv.filter(get_json_object(col("value"), "$.op") === "d").count() > 0,
       "test premise: some keys are deleted before the cut")
     Bootstrap.seed(spark, seedEnv, CdcSim.payloadSchema, Seq("id"), dir, retention)
-    assert(IncrementalSnapshot.versions(dir) === Seq(Bootstrap.SeedVersion))
+    assert(Commit.versions(dir) === Seq(Bootstrap.SeedVersion))
 
     // tail phase: post-cut changes PLUS redelivered pre-cut creates — among
     // them creates of already-deleted keys (id % 10 === 0), the resurrection
@@ -62,7 +62,7 @@ class BootstrapSpec extends AnyFunSuite {
     Bootstrap.startTail(spark, CdcPipeline.Files(in), CdcSim.payloadSchema,
       Seq("id"), dir, s"$tmp/chk", retention).awaitTermination()
 
-    val got = IncrementalSnapshot.readSnapshot(spark, dir).get
+    val got = BucketedSnapshot.readSnapshot(spark, dir).get
     val expected = CdcQueries.snapshotLatest(spark, sf)
     assert(got.filter(col("id") % 10 === 0).count() === 0, "resurrected keys")
     assert(got.exceptAll(expected).count() === 0)
@@ -73,7 +73,7 @@ class BootstrapSpec extends AnyFunSuite {
     Bootstrap.seed(spark, seedEnv, CdcSim.payloadSchema, Seq("id"), dir, retention)
     Bootstrap.startTail(spark, CdcPipeline.Files(in), CdcSim.payloadSchema,
       Seq("id"), dir, s"$tmp/chk", retention).awaitTermination()
-    val again = IncrementalSnapshot.readSnapshot(spark, dir).get
+    val again = BucketedSnapshot.readSnapshot(spark, dir).get
     assert(again.exceptAll(expected).count() === 0)
     assert(expected.exceptAll(again).count() === 0)
   }

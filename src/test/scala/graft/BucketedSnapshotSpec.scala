@@ -3,14 +3,15 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.cdc.{CdcQueries, CdcSim}
-import graft.streaming.{BucketedSnapshot, CdcPipeline, IncrementalSnapshot}
+import graft.cdc.{CdcOps, CdcQueries, CdcSim}
+import graft.streaming.{BucketedSnapshot, CdcPipeline, Commit}
 
-/** The bucketed store must be OUTPUT-IDENTICAL to IncrementalSnapshot while
-  * writing only touched buckets per batch — the O(touched) property is
-  * asserted on the filesystem itself (untouched buckets gain no version
-  * dirs), and the crash/replay/emptied-bucket seams the multi-dir commit
-  * introduces are each forced explicitly.
+/** The bucketed store must equal the latest-per-key snapshot of the log it
+  * has merged after every batch, while writing only touched buckets per
+  * batch — the O(touched) property is asserted on the filesystem itself
+  * (untouched buckets gain no version dirs), and the crash/replay/
+  * emptied-bucket seams the multi-dir commit introduces are each forced
+  * explicitly.
   */
 class BucketedSnapshotSpec extends AnyFunSuite {
   import TestSpark.{spark, sf}
@@ -23,16 +24,43 @@ class BucketedSnapshotSpec extends AnyFunSuite {
       .select(BucketedSnapshot.bucketOf(keys, nb)).head().getLong(0)
   }
 
-  test("bucketed snapshot equals the monolithic store across batches") {
+  private def partFiles(p: java.nio.file.Path): Int = {
+    import scala.jdk.CollectionConverters._
+    val s = Files.list(p)
+    try s.iterator().asScala.count(_.toString.endsWith(".parquet"))
+    finally s.close()
+  }
+
+  /** Rewrite the committed version dir `bucket=<b>/v=<v>` as several part
+    * files with the same rows — the fragmented layout an engine without
+    * merge's bucket clustering leaves, which compaction exists to repair.
+    * Returns the number of part files now in the dir.
+    */
+  private def fragment(dir: String, b: Long, v: Long): Int = {
+    val target = Paths.get(dir, s"bucket=$b/v=$v")
+    val stage = Paths.get(s"${dir}_fragment/b$b")
+    spark.read.parquet(target.toString).repartition(2)
+      .write.mode("overwrite").parquet(stage.toString)
+    val old = Files.walk(target)
+    try {
+      import scala.jdk.CollectionConverters._
+      old.iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    } finally old.close()
+    Files.move(stage, target)
+    partFiles(target)
+  }
+
+  test("bucketed snapshot equals the log snapshot after every batch") {
     val tmp = Files.createTempDirectory("graft_bsnap").toString
     val ch = CdcSim.parsedChangelog(spark, sf).localCheckpoint()
     val mid = ch.agg(expr("percentile_approx(ts_ms, 0.5)")).head().getLong(0)
     val slices = Seq(ch.filter(col("ts_ms") <= mid), ch.filter(col("ts_ms") > mid))
     slices.zipWithIndex.foreach { case (b, i) =>
       BucketedSnapshot.merge(s"$tmp/b", keys, CdcQueries.payloadCols)(b, i.toLong)
-      IncrementalSnapshot.merge(s"$tmp/m", keys, CdcQueries.payloadCols)(b, i.toLong)
       val got = BucketedSnapshot.readSnapshot(spark, s"$tmp/b").get
-      val want = IncrementalSnapshot.readSnapshot(spark, s"$tmp/m").get
+      // the definition: latest version per key over every slice merged so far
+      val want = CdcOps.snapshotLatest(slices.take(i + 1).reduce(_ unionByName _),
+          keys, "ts_ms", CdcQueries.payloadCols)
         .select(got.columns.map(col): _*)
       assert(got.exceptAll(want).count() === 0, s"batch $i: extra rows")
       assert(want.exceptAll(got).count() === 0, s"batch $i: missing rows")
@@ -167,16 +195,15 @@ class BucketedSnapshotSpec extends AnyFunSuite {
     assert(BucketedSnapshot.vacuum(dir, keep = 2).isEmpty)
   }
 
-  test("retention mode blocks resurrection and matches the monolithic retention store") {
+  test("retention mode blocks resurrection and serves the live snapshot") {
     val tmp = Files.createTempDirectory("graft_bret").toString
-    val bDir = s"$tmp/b"; val mDir = s"$tmp/m"
+    val bDir = s"$tmp/b"
     // retention horizon far beyond the changelog's ts spread: every
     // tombstone stays a stored row for the whole test
     val ret = 1L << 50
     val ch = CdcSim.parsedChangelog(spark, sf).localCheckpoint()
     BucketedSnapshot.merge(bDir, keys, CdcQueries.payloadCols,
       tombstoneRetention = Some(ret))(ch, 0L)
-    IncrementalSnapshot.merge(mDir, keys, CdcQueries.payloadCols, Some(ret))(ch, 0L)
     // at-least-once redelivery of every PRE-delete event of the deleted
     // keys (the sim tombstones id % 10 == 0): against a plain store these
     // arrive as the keys' only events and resurrect them; the stored
@@ -186,17 +213,10 @@ class BucketedSnapshotSpec extends AnyFunSuite {
     assert(redelivered.count() > 0, "need pre-delete events to redeliver")
     BucketedSnapshot.merge(bDir, keys, CdcQueries.payloadCols,
       tombstoneRetention = Some(ret))(redelivered, 1L)
-    IncrementalSnapshot.merge(mDir, keys, CdcQueries.payloadCols, Some(ret))(
-      redelivered, 1L)
     val got = BucketedSnapshot.readSnapshot(spark, bDir).get
     assert(got.filter(col("id") % 10 === 0).count() === 0, "resurrected keys")
-    // live view parity with the monolithic retention store…
-    val want = IncrementalSnapshot.readSnapshot(spark, mDir).get
-      .select(got.columns.map(col): _*)
-    assert(got.exceptAll(want).count() === 0)
-    assert(want.exceptAll(got).count() === 0)
-    // …and with the plain batch snapshot (retention changes what is STORED,
-    // never what readers see)
+    // the live view equals the plain batch snapshot (retention changes what
+    // is STORED, never what readers see)
     val plain = CdcQueries.snapshotLatest(spark, sf).select(got.columns.map(col): _*)
     assert(got.exceptAll(plain).count() === 0)
     assert(plain.exceptAll(got).count() === 0)
@@ -247,20 +267,13 @@ class BucketedSnapshotSpec extends AnyFunSuite {
     val mid = ch.agg(expr("percentile_approx(ts_ms, 0.5)")).head().getLong(0)
     val s0 = ch.filter(col("ts_ms") <= mid).localCheckpoint()
     val s1 = ch.filter(col("ts_ms") > mid).localCheckpoint()
-    // force the fragmentation a foreign (non-clustering) writer produces:
-    // bucket-clustered writes off AND AQE coalescing off, else the tiny spec
-    // SF lands one file per bucket either way
-    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-    val clusterKey = "spark.graft.clusterStoreWrites"
-    val prev = spark.conf.get(coalesceKey)
-    try {
-      spark.conf.set(coalesceKey, "false")
-      spark.conf.set(clusterKey, "false")
-      BucketedSnapshot.merge(dir, keys, CdcQueries.payloadCols)(s0, 0L)
-      BucketedSnapshot.merge(dir, keys, CdcQueries.payloadCols)(s1, 1L)
-    } finally {
-      spark.conf.set(coalesceKey, prev)
-      spark.conf.unset(clusterKey)
+    BucketedSnapshot.merge(dir, keys, CdcQueries.payloadCols)(s0, 0L)
+    BucketedSnapshot.merge(dir, keys, CdcQueries.payloadCols)(s1, 1L)
+    // fragment half the buckets' current version (both slices touch every
+    // bucket); the other half keep merge's one file per bucket
+    val fragmented = (0L until 8L).map(b => (b, 1L))
+    fragmented.foreach { case (b, v) =>
+      assert(fragment(dir, b, v) >= 2, s"bucket $b v $v not fragmented")
     }
     def inventory(): Map[String, Long] = {
       import scala.jdk.CollectionConverters._
@@ -276,18 +289,15 @@ class BucketedSnapshotSpec extends AnyFunSuite {
       .collect().map(_.toString).sorted.toSeq
     val invBefore = inventory()
     val done = BucketedSnapshot.compact(spark, dir)
-    assert(done.nonEmpty, "expected fragmented buckets at the spec SF " +
-      "(multi-partition merge writes several part files per bucket version)")
+    // exactly the fragmented versions are rewritten
+    assert(done.toSet === fragmented.toSet)
     // rewritten buckets now serve ONE part file from a .c1 generation dir;
     // the superseded plain dir is gone
     done.foreach { case (b, v) =>
       assert(!Files.isDirectory(Paths.get(dir, s"bucket=$b/v=$v")))
       val g = Paths.get(dir, s"bucket=$b/v=$v.c1")
       assert(Files.isDirectory(g), s"missing $g")
-      import scala.jdk.CollectionConverters._
-      val fs = Files.list(g)
-      val parts = try fs.iterator().asScala.count(_.toString.endsWith(".parquet"))
-        finally fs.close()
+      val parts = partFiles(g)
       assert(parts === 1, s"bucket $b v $v: $parts part files after compact")
     }
     // untouched buckets' files byte-identical (same paths, same sizes)
@@ -344,25 +354,17 @@ class BucketedSnapshotSpec extends AnyFunSuite {
       ch.filter(col("ts_ms") <= cuts(0)),
       ch.filter(col("ts_ms") > cuts(0) && col("ts_ms") <= cuts(1)),
       ch.filter(col("ts_ms") > cuts(1))).map(_.localCheckpoint())
-    // force the fragmentation a foreign (non-clustering) writer produces:
-    // bucket-clustered writes off AND AQE coalescing off, else the tiny spec
-    // SF lands one file per bucket either way
-    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-    val clusterKey = "spark.graft.clusterStoreWrites"
-    val prev = spark.conf.get(coalesceKey)
-    try {
-      spark.conf.set(coalesceKey, "false")
-      spark.conf.set(clusterKey, "false")
-      BucketedSnapshot.merge(dir, keys, CdcQueries.payloadCols)(slices(0), 0L)
-      BucketedSnapshot.merge(dir, keys, CdcQueries.payloadCols)(slices(1), 1L)
-      // compact the referenced (v=1-or-0) dirs, then a LATER merge lands
-      // on top of compacted generations
-      assert(BucketedSnapshot.compact(spark, dir).nonEmpty)
-      BucketedSnapshot.merge(dir, keys, CdcQueries.payloadCols)(slices(2), 2L)
-    } finally {
-      spark.conf.set(coalesceKey, prev)
-      spark.conf.unset(clusterKey)
+    BucketedSnapshot.merge(dir, keys, CdcQueries.payloadCols)(slices(0), 0L)
+    BucketedSnapshot.merge(dir, keys, CdcQueries.payloadCols)(slices(1), 1L)
+    // compact the referenced v=1 dirs (fragmented here), then a LATER merge
+    // lands on top of compacted generations
+    val nb = BucketedSnapshot.DefaultBuckets.toLong
+    (0L until nb).foreach { b =>
+      assert(fragment(dir, b, 1L) >= 2, s"bucket $b not fragmented")
     }
+    assert(BucketedSnapshot.compact(spark, dir).map(_._1).toSet ===
+      (0L until nb).toSet)
+    BucketedSnapshot.merge(dir, keys, CdcQueries.payloadCols)(slices(2), 2L)
     // correctness across the compose: full snapshot and asOf(1)
     val want = CdcQueries.snapshotLatest(spark, sf)
     val got = BucketedSnapshot.readSnapshot(spark, dir).get
@@ -398,24 +400,17 @@ class BucketedSnapshotSpec extends AnyFunSuite {
     val dir = s"$tmp/b"
     val ret = 1L << 50
     val ch = CdcSim.parsedChangelog(spark, sf).localCheckpoint()
-    // force the fragmentation a foreign (non-clustering) writer produces:
-    // bucket-clustered writes off AND AQE coalescing off, else the tiny spec
-    // SF lands one file per bucket either way
-    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-    val clusterKey = "spark.graft.clusterStoreWrites"
-    val prev = spark.conf.get(coalesceKey)
-    try {
-      spark.conf.set(coalesceKey, "false")
-      spark.conf.set(clusterKey, "false")
-      BucketedSnapshot.merge(dir, keys, CdcQueries.payloadCols,
-        tombstoneRetention = Some(ret))(ch, 0L)
-    } finally {
-      spark.conf.set(coalesceKey, prev)
-      spark.conf.unset(clusterKey)
-    }
+    BucketedSnapshot.merge(dir, keys, CdcQueries.payloadCols,
+      tombstoneRetention = Some(ret))(ch, 0L)
     // compact rewrites raw stored rows — the op='d' tombstones must come
-    // through as rows, or the next redelivery resurrects the keys
-    assert(BucketedSnapshot.compact(spark, dir).nonEmpty)
+    // through as rows, or the next redelivery resurrects the keys. Every
+    // bucket is fragmented, so every stored tombstone passes through it.
+    val nb = BucketedSnapshot.DefaultBuckets.toLong
+    (0L until nb).foreach { b =>
+      assert(fragment(dir, b, 0L) >= 2, s"bucket $b not fragmented")
+    }
+    assert(BucketedSnapshot.compact(spark, dir).map(_._1).toSet ===
+      (0L until nb).toSet)
     val redelivered = ch.filter(col("id") % 10 === 0 && col("op") =!= "d")
       .localCheckpoint()
     BucketedSnapshot.merge(dir, keys, CdcQueries.payloadCols,
@@ -476,5 +471,152 @@ class BucketedSnapshotSpec extends AnyFunSuite {
     val want = CdcQueries.snapshotLatest(spark, sf).select(got.columns.map(col): _*)
     assert(got.exceptAll(want).count() === 0)
     assert(want.exceptAll(got).count() === 0)
+  }
+
+  test("snapshot converges to batch semantics across incremental file drops") {
+    val tmp = Files.createTempDirectory("graft_inc").toString
+    val in = s"$tmp/in"; Files.createDirectories(Paths.get(in))
+    val ch = CdcSim.ordersChangelog(spark, sf)
+
+    def drop(name: String, filter: org.apache.spark.sql.Column): Unit = {
+      ch.filter(filter).select("value").coalesce(1)
+        .write.mode("overwrite").text(s"$tmp/stage_$name")
+      val src = new java.io.File(s"$tmp/stage_$name").listFiles()
+        .filter(_.getName.endsWith(".txt")).head
+      Files.copy(src.toPath, Paths.get(in, s"$name.txt"))
+    }
+    def run(): Unit = {
+      val q = BucketedSnapshot.start(spark, CdcPipeline.Files(in),
+        CdcSim.payloadSchema, keys, s"$tmp/snap", s"$tmp/chk")
+      q.awaitTermination()
+    }
+
+    // first drop: creates + updates only; snapshot must contain every key
+    drop("a", expr("get_json_object(value, '$.op')") =!= "d")
+    run()
+    val mid = BucketedSnapshot.readSnapshot(spark, s"$tmp/snap").get
+    assert(mid.filter(col("id") % 10 === 0).count() > 0) // deletes not applied yet
+
+    // second drop: the tombstones; snapshot must now equal the batch result
+    drop("b", expr("get_json_object(value, '$.op')") === "d")
+    run()
+    val fin = BucketedSnapshot.readSnapshot(spark, s"$tmp/snap").get
+    val expected = CdcQueries.snapshotLatest(spark, sf).select(fin.columns.map(col): _*)
+    assert(fin.exceptAll(expected).count() === 0)
+    assert(expected.exceptAll(fin).count() === 0)
+
+    // replaying with the same checkpoint is a no-op
+    val versions = Commit.versions(s"$tmp/snap")
+    run()
+    assert(Commit.versions(s"$tmp/snap") === versions)
+    val again = BucketedSnapshot.readSnapshot(spark, s"$tmp/snap").get
+    assert(again.count() === expected.count())
+  }
+
+  test("a crash after the marker: replay is a no-op, N+1 merges on top") {
+    val tmp = Files.createTempDirectory("graft_crash").toString
+    val dir = s"$tmp/snap"
+    val ch = CdcSim.parsedChangelog(spark, sf).localCheckpoint()
+    def slice(m: Int) = ch.filter(col("id") % 3 === m).limit(150).localCheckpoint()
+    def merge(m: Int, id: Long): Unit =
+      BucketedSnapshot.merge(dir, keys, CdcQueries.payloadCols)(slice(m), id)
+    def ids(): Set[Long] =
+      BucketedSnapshot.readSnapshot(spark, dir).get
+        .select(col("id").cast("long")).collect().map(_.getLong(0)).toSet
+
+    merge(0, 0L)
+    // batch 1 commits (version dirs, then marker) and the process dies
+    // before the stream checkpoint records it, so the stream redelivers it
+    merge(1, 1L)
+    val v1 = ids()
+    assert(BucketedSnapshot.latestVersion(dir) === Some(1L))
+
+    // the redelivery (here with different rows) must not remerge
+    merge(2, 1L)
+    assert(BucketedSnapshot.latestVersion(dir) === Some(1L))
+    assert(ids() === v1)
+
+    // and the stream keeps going: batch 2 merges on top of version 1
+    merge(2, 2L)
+    assert(BucketedSnapshot.latestVersion(dir) === Some(2L))
+    val v2 = ids()
+    assert(v2.filter(_ % 3 != 2) === v1)
+    assert(v2.exists(_ % 3 == 2))
+  }
+
+  test("time travel reads every committed version; vacuum retains the newest") {
+    val tmp = Files.createTempDirectory("graft_tt").toString
+    val dir = s"$tmp/snap"
+    val ch = CdcSim.parsedChangelog(spark, sf).localCheckpoint()
+
+    // three batches with different key slices so every version differs
+    def slice(m: Int) = ch.filter(col("id") % 3 === m).limit(150).localCheckpoint()
+    def state(): Set[String] =
+      BucketedSnapshot.readSnapshot(spark, dir).get
+        .select(concat_ws("|", col("id"), col("ts_ms"))).collect()
+        .map(_.getString(0)).toSet
+    val seen = (0L to 2L).map { b =>
+      BucketedSnapshot.merge(dir, keys, CdcQueries.payloadCols)(slice(b.toInt), b)
+      b -> state()
+    }.toMap
+    assert(Commit.versions(dir) === Seq(0L, 1L, 2L))
+    assert(seen(0L) !== seen(2L))
+
+    // VERSION AS OF: exact hit, rounding down, pre-history, and beyond-latest
+    def asOf(v: Long): Option[Set[String]] =
+      BucketedSnapshot.readSnapshotAsOf(spark, dir, v)
+        .map(df => df.select(concat_ws("|", col("id"), col("ts_ms"))).collect()
+          .map(_.getString(0)).toSet)
+    (0L to 2L).foreach(v => assert(asOf(v) === Some(seen(v))))
+    assert(asOf(-1L) === None)
+    assert(asOf(99L) === Some(seen(2L)))
+
+    // vacuum to the newest 2: version 0 is gone from travel and disk (every
+    // bucket batch 1 rewrote drops its v=0); the latest read is untouched
+    def onDisk(v: Long): Seq[(Long, Long)] =
+      (0L until BucketedSnapshot.DefaultBuckets.toLong).map(b => (b, v))
+        .filter { case (b, _) => Files.isDirectory(Paths.get(dir, s"bucket=$b/v=$v")) }
+    val v0 = onDisk(0L)
+    assert(v0.nonEmpty)
+    assert(BucketedSnapshot.vacuum(dir, keep = 2).sorted ===
+      v0.filter { case (b, _) => Files.isDirectory(Paths.get(dir, s"bucket=$b/v=1")) })
+    assert(asOf(0L) === None)
+    assert(asOf(1L) === Some(seen(1L)))
+    assert(asOf(2L) === Some(seen(2L)))
+    assert(state() === seen(2L))
+
+    // vacuum never drops the latest version, even when keep is minimal
+    val dropped = BucketedSnapshot.vacuum(dir, keep = 1)
+    assert(dropped.nonEmpty && dropped.forall(_._2 <= 1L))
+    assert(state() === seen(2L))
+  }
+
+  test("a crash before the marker leaves an unread orphan, no keys lost") {
+    val tmp = Files.createTempDirectory("graft_orphan").toString
+    val dir = s"$tmp/snap"
+    val ch = CdcSim.parsedChangelog(spark, sf).limit(200).localCheckpoint()
+    def ids(): Set[Long] =
+      BucketedSnapshot.readSnapshot(spark, dir).get
+        .select(col("id").cast("long")).collect().map(_.getLong(0)).toSet
+
+    BucketedSnapshot.merge(dir, keys, CdcQueries.payloadCols)(ch, 0L)
+    BucketedSnapshot.merge(dir, keys, CdcQueries.payloadCols)(ch, 1L)
+    val before = ids()
+    assert(before.size > 1)
+
+    // batch 2 died mid-write: a partial bucket version dir without a marker
+    val b = bucketIdOf(before.head, BucketedSnapshot.DefaultBuckets)
+    BucketedSnapshot.readSnapshot(spark, dir).get.limit(1).localCheckpoint()
+      .write.mode("overwrite").parquet(s"$dir/bucket=$b/v=2")
+    assert(BucketedSnapshot.latestVersion(dir) === Some(1L))
+    assert(Commit.versions(dir) === Seq(0L, 1L))
+    assert(ids() === before)
+    assert(BucketedSnapshot.readSnapshotAsOf(spark, dir, 2L).get.count() === before.size)
+
+    // the replay merges against committed version 1, not the orphan, and
+    // overwrites it
+    BucketedSnapshot.merge(dir, keys, CdcQueries.payloadCols)(ch, 2L)
+    assert(BucketedSnapshot.latestVersion(dir) === Some(2L))
+    assert(ids() === before)
   }
 }

@@ -14,7 +14,7 @@ import graft.cdc.CdcOps
   *     formulations of "current state").
   *  2. dedupRedelivery is idempotent under arbitrary re-delivery.
   *  3. snapshot(a ∪ b) ≡ snapshot(snapshot(a) as op='r' ∪ b) — the
-  *     incremental-merge identity IncrementalSnapshot.merge is built on,
+  *     incremental-merge identity BucketedSnapshot.merge is built on,
   *     for EVERY split point, not just the happy path.
   */
 class CdcPropertySpec extends AnyFunSuite {

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.cdc.CdcSim
-import graft.streaming.{CdcPipeline, IncrementalSnapshot}
+import graft.streaming.{BucketedSnapshot, CdcPipeline}
 
 /** The reference's whole pipeline in one test: changelog stream → envelope
   * parse → incrementally-merged current state → analytics on the state
@@ -22,12 +22,12 @@ class EndToEndSpec extends AnyFunSuite {
     val tmp = Files.createTempDirectory("graft_e2e").toString
     CdcSim.ordersChangelog(spark, sf).select("value")
       .write.mode("overwrite").text(s"$tmp/in")
-    val q = IncrementalSnapshot.start(spark, CdcPipeline.Files(s"$tmp/in"),
+    val q = BucketedSnapshot.start(spark, CdcPipeline.Files(s"$tmp/in"),
       CdcSim.payloadSchema, Seq("id"), s"$tmp/snap", s"$tmp/chk")
     q.awaitTermination()
 
     // analytics over the CDC-materialized state, not the source table
-    val state = IncrementalSnapshot.readSnapshot(spark, s"$tmp/snap").get
+    val state = BucketedSnapshot.readSnapshot(spark, s"$tmp/snap").get
     val revenueByStatus = state.groupBy(col("status"))
       .agg(round(sum(col("price").cast("decimal(18,4)")), 2).cast("double").as("revenue"),
         count(lit(1)).as("n"))

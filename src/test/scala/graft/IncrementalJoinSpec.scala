@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.cdc.{CdcOps, CdcSim, Envelope}
-import graft.streaming.{IncrementalJoin, IncrementalSnapshot}
+import graft.streaming.{Commit, IncrementalJoin}
 
 /** The maintained join must equal a full recompute of
   * snapshot(orders) ⋈ snapshot(customer) after EVERY batch — including
@@ -75,8 +75,31 @@ class IncrementalJoinSpec extends AnyFunSuite {
       expected(lit(true), lit(true)))
 
     // replay with the same checkpoint: no new batch, no new version
-    val versionsBefore = IncrementalSnapshot.versions(s"$tmp/j")
+    val versionsBefore = Commit.versions(s"$tmp/j")
     run()
-    assert(IncrementalSnapshot.versions(s"$tmp/j") === versionsBefore)
+    assert(Commit.versions(s"$tmp/j") === versionsBefore)
+  }
+
+  test("a side whose first batches are empty joins as an empty snapshot") {
+    val tmp = Files.createTempDirectory("graft_ij_empty").toString
+    val isC = expr("get_json_object(value, '$.op')") === "c"
+    val a = Envelope.parse(CdcSim.ordersChangelog(spark, sf).filter(isC)
+      .select("value"), CdcSim.payloadSchema).localCheckpoint()
+    val b = Envelope.parse(CdcSim.customerChangelog(spark, sf).filter(isC)
+      .select("value"), CdcSim.customerSchema).localCheckpoint()
+    def merge(aB: DataFrame, bB: DataFrame, id: Long): Unit =
+      IncrementalJoin.merge(s"$tmp/j", s"$tmp/a", s"$tmp/b",
+        aPayload, bPayload, "custkey")(aB, bB, id)
+
+    // batch 0 carries only the left topic: the right store holds no rows yet
+    merge(a, b.limit(0), 0L)
+    assert(IncrementalJoin.readJoin(spark, s"$tmp/j").get.count() === 0)
+    // batch 1 delivers the right side: every matched pair appears
+    merge(a.limit(0), b, 1L)
+    val got = IncrementalJoin.readJoin(spark, s"$tmp/j").get
+    val want = a.join(b.toDF(b.columns.map("b_" + _): _*),
+      col("custkey") === col("b_id"))
+    assert(want.count() > 0)
+    assert(got.count() === want.count())
   }
 }

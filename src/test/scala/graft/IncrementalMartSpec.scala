@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.cdc.CdcSim
-import graft.streaming.{CdcPipeline, IncrementalMart, IncrementalSnapshot}
+import graft.streaming.{BucketedSnapshot, CdcPipeline, Commit, IncrementalMart}
 
 /** The incremental aggregate mart must equal the batch aggregate of the
   * maintained snapshot after EVERY micro-batch — while only ever folding
@@ -16,7 +16,7 @@ class IncrementalMartSpec extends AnyFunSuite {
   import TestSpark.{spark, sf}
 
   private def expectedFromSnapshot(snapDir: String): DataFrame =
-    IncrementalSnapshot.readSnapshot(spark, snapDir).get
+    BucketedSnapshot.readSnapshot(spark, snapDir).get
       .groupBy(col("status"))
       .agg(count(lit(1)).as("n"),
         sum(col("price").cast("decimal(18,4)")).cast("decimal(18,4)").as("total"))
@@ -76,14 +76,14 @@ class IncrementalMartSpec extends AnyFunSuite {
 
     // crash window: the snapshot commits batch 1 but the process dies
     // before the mart does
-    IncrementalSnapshot.merge(snapDir, Seq("id"), payloadCols)(b1, 1L)
-    assert(IncrementalSnapshot.latestVersion(snapDir) === Some(1L))
-    assert(IncrementalSnapshot.latestVersion(martDir) === Some(0L))
+    BucketedSnapshot.merge(snapDir, Seq("id"), payloadCols)(b1, 1L)
+    assert(BucketedSnapshot.latestVersion(snapDir) === Some(1L))
+    assert(Commit.latest(martDir) === Some(0L))
 
     // the replayed foreachBatch no-ops the snapshot merge and still folds
     // the batch-1 delta against the PRE-batch version (not the snapshot's latest)
     IncrementalMart.merge(snapDir, martDir, Seq("id"), payloadCols, "status", "price")(b1, 1L)
-    assert(IncrementalSnapshot.latestVersion(martDir) === Some(1L))
+    assert(Commit.latest(martDir) === Some(1L))
     assertMartMatches(snapDir, martDir)
 
     // and a second replay of the same batch id is a pure no-op

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.streaming.{IncrementalMart, IncrementalSnapshot, TopkMart}
+import graft.streaming.{BucketedSnapshot, Commit, IncrementalMart, TopkMart}
 
 /** The maintained top-k view must equal a recompute from the mart after
   * EVERY batch, while taking the O(k + batch) candidate path on monotone
@@ -50,9 +50,9 @@ class TopkMartSpec extends AnyFunSuite {
   test("a wrong-k caller fails the precondition with NO state change") {
     val d = dirs()
     merge(d, batchOf(Seq((1L, 1L, 10.0, "c", 1L))), 0L)
-    val snapV = IncrementalSnapshot.latestVersion(d.snap)
-    val martV = IncrementalSnapshot.latestVersion(d.mart)
-    val topkV = IncrementalSnapshot.latestVersion(d.topk)
+    val snapV = BucketedSnapshot.latestVersion(d.snap)
+    val martV = Commit.latest(d.mart)
+    val topkV = Commit.latest(d.topk)
     // r13 advice: _K is validated BEFORE IncrementalMart.merge — a k
     // mismatch must be a pure precondition failure, not a mart silently
     // advanced one batch past the top-k view
@@ -60,9 +60,9 @@ class TopkMartSpec extends AnyFunSuite {
       TopkMart.merge(d.snap, d.mart, d.topk, keyCols, payloadCols,
         "custkey", "price", K + 1)(batchOf(Seq((2L, 2L, 5.0, "c", 2L))), 1L)
     }
-    assert(IncrementalSnapshot.latestVersion(d.snap) === snapV)
-    assert(IncrementalSnapshot.latestVersion(d.mart) === martV)
-    assert(IncrementalSnapshot.latestVersion(d.topk) === topkV)
+    assert(BucketedSnapshot.latestVersion(d.snap) === snapV)
+    assert(Commit.latest(d.mart) === martV)
+    assert(Commit.latest(d.topk) === topkV)
     // replaying the same batch with the stored k proceeds normally
     merge(d, batchOf(Seq((2L, 2L, 5.0, "c", 2L))), 1L)
     assert(gotTopk(d) === expectedTopk(d))
